@@ -61,7 +61,7 @@ def start_session(n: int):
     from osmptparser_spark.session import get_spark
 
     spark = get_spark(
-        "perfbench", master=f"local[{n}]", shuffle_partitions=2 * n,
+        "perfbench", master=f"local[{n}]", shuffle_partitions=n,
         confs=session_confs(n),
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -119,13 +119,13 @@ def source_digest(*modules) -> str:
     return h.hexdigest()[:12]
 
 
-def ensure_input(spark, workload: str, key: dict, generate) -> Input:
+def ensure_input(workload: str, key: dict, generate) -> Input:
     """Input for ``key`` (generator source digest, seed, size), from the
     cache when its manifest matches ``key`` and every file's content
     digest matches the manifest; otherwise regenerated.
 
-    ``generate(spark, data_dir)`` writes the parquet input to
-    ``data_dir`` and returns ``(rows, reference)``."""
+    ``generate(data_dir)`` writes the parquet input to ``data_dir`` and
+    returns ``(rows, reference)``."""
     name = "-".join(f"{k}{v}" for k, v in sorted(key.items()))
     d = os.path.join(WORK, "inputs", f"{workload}-{name}")
     man_path = os.path.join(d, "manifest.json")
@@ -144,7 +144,7 @@ def ensure_input(spark, workload: str, key: dict, generate) -> Input:
     shutil.rmtree(d, ignore_errors=True)
     os.makedirs(d)
     data = os.path.join(d, "data")
-    rows, ref = generate(spark, data)
+    rows, ref = generate(data)
     ref_path = os.path.join(d, "reference.json")
     with open(ref_path, "w") as f:
         json.dump(ref, f)
@@ -220,25 +220,29 @@ class Layers:
         self.spark = spark
         self.tracer = tracer
         self.metrics: dict[str, dict] = {}
-        self.calls_cpu_s = 0.0  # executor CPU of all layer calls
+        self.groups: dict[str, list[str]] = {}  # layer -> job groups of its calls
+        #: wall time of work the untraced job does not do: measurement-only
+        #: queries, and sub-layer calls that a whole-engine call repeats
+        self.instrument_wall_s = 0.0
+        self.repeated_wall_s = 0.0
         meter.set_group(spark, self.GLUE)
 
     @contextmanager
     def instrument(self):
         """Queries that only measure or check (layer counters, output
-        digests): outside both the layers' groups and the glue that
-        ``coverage`` compares with."""
+        digests): outside the layers' groups, and left out of the traced
+        wall time that the trace overhead compares."""
         meter.set_group(self.spark, "traced-instrument")
+        t0 = time.perf_counter()
         try:
             yield
         finally:
+            self.instrument_wall_s += time.perf_counter() - t0
             meter.set_group(self.spark, self.GLUE)
 
-    def coverage(self) -> float:
-        """Share of the traced run's executor CPU spent in layer calls
-        rather than in the glue between them (row counts, selections)."""
-        glue = meter.group_metrics(self.spark, self.GLUE)["exec_cpu_s"]
-        return self.calls_cpu_s / (self.calls_cpu_s + glue)
+    def exec_cpu_s(self, layers) -> float:
+        """Executor CPU of ``layers`` together."""
+        return sum(self.metrics[x]["exec_cpu_s"] for x in layers if x in self.metrics)
 
     def call(self, layer: str, name: str, fn, rows_in: int):
         """``fn() -> (output, rows_out)``; -> output."""
@@ -253,11 +257,11 @@ class Layers:
                 py = meter.py_worker_cpu_seconds() - py0
                 meter.set_group(self.spark, self.GLUE)
             m = meter.group_metrics(self.spark, group)
-            self.calls_cpu_s += m["exec_cpu_s"]
             m.update(wall_s=wall, py_cpu_s=py, rows_in=rows_in, rows_out=rows_out)
             rec["layer"] = layer
             rec["metrics"] = m
             rec["group"] = group
+        self.groups.setdefault(layer, []).append(group)
         acc = self.metrics.setdefault(layer, {k: 0 for k in _ADD} | {"peak_exec_mem_mb": 0.0})
         for k in _ADD:
             acc[k] += m[k]
@@ -266,7 +270,10 @@ class Layers:
 
     def remainder(self, layer: str, call: dict, parts: list[str]) -> None:
         """Record ``layer`` as ``call`` minus the metrics of its sub-layers
-        (peak memory and row counts stay those of the call)."""
+        (peak memory and row counts stay those of the call). The
+        sub-layer calls ran the same work again, so their wall time is
+        counted as repeated."""
+        self.repeated_wall_s += sum(self.metrics[p]["wall_s"] for p in parts)
         m = dict(call)
         for k in ("wall_s", "exec_cpu_s", "py_cpu_s", "shuffle_write_mb", "jobs", "tasks"):
             m[k] = call[k] - sum(self.metrics[p][k] for p in parts)
@@ -296,6 +303,12 @@ def dangling_refs(rel, rel_ways, node_rows, stops=None) -> int:
         n_stop_refs = rel.select(F.sum(F.size("stop_refs"))).first()[0] or 0
         out += n_stop_refs - (stops.select(F.sum(F.size("stops"))).first()[0] or 0)
     return int(out)
+
+
+def pip_candidates(layers: Layers) -> int:
+    """Candidate (point, polygon) pairs of the traced point-in-polygon
+    calls: the rows their join emitted into the exact refine."""
+    return sum(meter.join_output_rows(layers.spark, g) for g in layers.groups["pip"])
 
 
 def stitch_counters(codes) -> dict:

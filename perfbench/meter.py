@@ -2,7 +2,8 @@
 store per job group, and in-memory spans.
 
 Everything here observes the engine from outside: it reads /proc and
-Spark's own status store, and it adds nothing to the engine's plans.
+Spark's own status stores, and it adds nothing to the engine's plans.
+The whole-tree CPU, steal and capacity-probe helpers are ``bench.py``'s.
 """
 
 from __future__ import annotations
@@ -10,6 +11,12 @@ from __future__ import annotations
 import os
 import time
 from contextlib import contextmanager
+
+from bench import (  # noqa: F401  (re-exported)
+    _capacity_probe as capacity_probe,
+    _steal_seconds as steal_seconds,
+    _tree_cpu_seconds as tree_cpu_seconds,
+)
 
 _TICK = os.sysconf("SC_CLK_TCK")
 _PY_WORKER_MARKERS = (b"pyspark.daemon", b"pyspark.worker")
@@ -68,14 +75,6 @@ def _cmdline(pid: int) -> bytes:
         return b""
 
 
-def tree_cpu_seconds() -> float:
-    """CPU seconds (user+sys) of this process and every descendant: the
-    driver, the Spark JVM and the PySpark workers, including workers
-    that already exited and were reaped by their parent."""
-    table = _proc_table()
-    return sum(table[p][1] + table[p][2] for p in _descendants(table, os.getpid()))
-
-
 def py_worker_cpu_seconds() -> float:
     """CPU seconds of the PySpark daemon and its forked workers (the
     daemon reaps its workers, so exited workers count through it)."""
@@ -114,32 +113,6 @@ def tree_peak_rss_mb() -> float:
         except OSError:
             continue
     return total_kb / 1024
-
-
-def steal_seconds() -> float:
-    """Host-wide hypervisor steal time so far, in seconds."""
-    with open("/proc/stat") as f:
-        return int(f.readline().split()[8]) / _TICK
-
-
-def capacity_probe(n: int = 8_000_000) -> float:
-    """Single-thread fixed work (splitmix64 over ``n`` lanes), min of 3,
-    in seconds. A slow run with a slow probe is a slow host, not a slow
-    program."""
-    import numpy as np
-
-    best = float("inf")
-    x = np.arange(n, dtype=np.uint64)
-    for _ in range(3):
-        t0 = time.perf_counter()
-        with np.errstate(over="ignore"):
-            y = x ^ (x >> np.uint64(30))
-            y *= np.uint64(0xBF58476D1CE4E5B9)
-            y ^= y >> np.uint64(27)
-            y *= np.uint64(0x94D049BB133111EB)
-            y ^= y >> np.uint64(31)
-        best = min(best, time.perf_counter() - t0)
-    return best
 
 
 # --- Spark status store ---------------------------------------------------------
@@ -185,6 +158,35 @@ def group_metrics(spark, group: str) -> dict:
         "jobs": len(job_ids),
         "tasks": tasks,
     }
+
+
+def join_output_rows(spark, group: str) -> int:
+    """Rows that the join operators of ``group``'s SQL executions emitted
+    ("number of output rows" of every plan node named ``*Join``), read
+    from the SQL status store. For a spatial join this is its candidate
+    pairs, before the exact refine."""
+    sc = spark.sparkContext
+    job_ids = list(sc.statusTracker().getJobIdsForGroup(group))
+    store = spark._jsparkSession.sharedState().statusStore()
+    executions = store.executionsList()
+    total = 0
+    for i in range(executions.size()):
+        ex = executions.apply(i)
+        if not any(ex.jobs().contains(j) for j in job_ids):
+            continue
+        values = store.executionMetrics(ex.executionId())
+        nodes = store.planGraph(ex.executionId()).allNodes()
+        for k in range(nodes.size()):
+            node = nodes.apply(k)
+            if not node.name().endswith("Join"):
+                continue
+            metrics = node.metrics()
+            for q in range(metrics.size()):
+                m = metrics.apply(q)
+                v = values.get(m.accumulatorId())
+                if m.name() == "number of output rows" and v.isDefined():
+                    total += int(v.get().replace(",", ""))
+    return total
 
 
 def job_names(spark, group: str) -> list[str]:

@@ -5,6 +5,13 @@ Why: it has no geo layer, so stitch and join-strategy changes should
 not move it. Its cost is candidate blowup and a fixed overhead per
 connected-components round, not data volume, so it shows near-dup
 dedup changes.
+
+The check requires every planted chain to come out as one cluster.
+The engine's MinHash hash family, (a * x + b) mod (2^61 - 1) with
+a < 2^31 over 32-bit x, rarely wraps, so the smallest shingles win
+most of the 64 functions; on every seed tried, a few chains split.
+Until that is fixed this workload reports ``correct: false`` and is
+left out of BENCHMARK.json.
 """
 
 from __future__ import annotations
@@ -33,13 +40,15 @@ K = 9  # byte shingle length of minhash_lsh_pairs
 #: Jaccard >= LINK_J, so LSH misses a link with odds below 1e-8.
 LINK_J = 0.9
 
+#: Timed jobs per run at least: records_per_s is their median.
+MIN_JOBS = 3
+
+
 def key() -> dict:
     """Input cache key: generator sources and input size."""
-    from osmptparser_spark.operators import dedup
-
     from . import common
 
-    return {"gen": common.source_digest(sys.modules[__name__], dedup), "docs": N_DOCS,
+    return {"gen": common.source_digest(sys.modules[__name__], common), "docs": N_DOCS,
             "chains": N_CHAINS}
 
 
@@ -93,18 +102,11 @@ def _corpus(seed: int):
 
 
 def generate(spark, path: str, seed: int):
-    """Corpus plus reference. A planted link (J >= 0.9) whose documents
-    share a band bucket under the engine's signatures must come out as a
-    pair; links the signatures separate measure the hash family's recall."""
+    """Corpus plus reference: the texts, for exact Jaccard, and the
+    planted chains, each of which must come out as one cluster."""
     texts, chains = _corpus(seed)
     n = write_rows(spark, list(enumerate(texts)), "doc_id BIGINT, text STRING", path)
-    cands = lsh_candidates(spark.read.parquet(path))
-    return n, {
-        "chains": chains,
-        "texts": texts,
-        "expected_links": [p for p in planted_links(chains) if p in cands],
-        "candidate_pairs": len(cands),
-    }
+    return n, {"chains": chains, "texts": texts}
 
 
 def load(spark, path: str):
@@ -114,28 +116,21 @@ def load(spark, path: str):
 # --- job ----------------------------------------------------------------------------
 
 
-def digest(pairs, comps) -> dict:
+def digest(outputs) -> dict:
+    """Small collected digest of the job's full output ``(pairs, comps)``."""
+    pairs, comps = outputs
     p = pairs.select("id_a", "id_b", "n_common", "n_union").collect()
     c = comps.select("node", "component").collect()
     return {"pairs": [list(map(int, r)) for r in p], "components": {str(a): int(b) for a, b in c}}
 
 
-def job(spark, docs) -> dict:
-    """The timed job; -> digest of its full output."""
+def job(spark, docs) -> tuple:
+    """The timed job; -> its outputs, materialized, for ``digest``."""
     from osmptparser_spark.operators.components import connected_components
     from osmptparser_spark.operators.dedup import minhash_lsh_pairs
 
-    pairs = minhash_lsh_pairs(docs, threshold=THRESHOLD).cache()
-    return digest(pairs, connected_components(pairs, "id_a", "id_b"))
-
-
-def warm_up(spark, docs) -> None:
-    """MinHash signatures of a 1/32 slice: starts the Python workers."""
-    from pyspark.sql import functions as F
-
-    from osmptparser_spark.operators.dedup import minhash_signatures_from_text
-
-    minhash_signatures_from_text(docs.filter(F.col("doc_id") % 32 == 0)).count()
+    pairs = materialize(minhash_lsh_pairs(docs, threshold=THRESHOLD))[0]
+    return pairs, materialize(connected_components(pairs, "id_a", "id_b"))[0]
 
 
 def traced(layers: Layers, docs, n_docs: int, ref: dict) -> dict:
@@ -147,44 +142,18 @@ def traced(layers: Layers, docs, n_docs: int, ref: dict) -> dict:
     pairs = layers.call("minhash", "minhash_lsh_pairs",
                         lambda: materialize(minhash_lsh_pairs(docs, threshold=THRESHOLD)), n_docs)
     n_pairs = layers.metrics["minhash"]["rows_out"]
-    span = len(layers.tracer.spans)
     comps = layers.call("components", "connected_components",
                         lambda: materialize(connected_components(pairs, "id_a", "id_b")), n_pairs)
-    group = layers.tracer.spans[span]["group"]
+    group = layers.groups["components"][0]
     rounds = sum("checkpoint" in name.lower() for name in meter.job_names(layers.spark, group))
     with layers.instrument():
-        d = digest(pairs, comps)
-    cand = ref["candidate_pairs"]
+        d = digest((pairs, comps))
     extra = {
-        "minhash.candidate_pairs": cand,
         "minhash.verified_pairs": n_pairs,
-        "minhash.pair_precision": n_pairs / cand if cand else 0.0,
         "minhash.planted_link_recall": link_recall(d, ref),
         "components.rounds": rounds,
     }
     return {"digest": d, "extra": extra, "not_in_job": []}
-
-
-def lsh_candidates(docs, bands: int = 16, max_bucket: int = 256) -> set:
-    """Distinct pairs that share an LSH band bucket, replayed on the
-    driver from the engine's own signatures (minhash_lsh_pairs' defaults:
-    64 hashes, 16 bands, buckets above 256 members dropped)."""
-    from osmptparser_spark.operators.dedup import minhash_signatures_from_text
-
-    rows = minhash_signatures_from_text(docs).collect()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    sig = np.array([r[1] for r in rows], dtype=np.int64)
-    per = sig.shape[1] // bands
-    pairs = set()
-    for b in range(bands):
-        buckets: dict = {}
-        for i, key in enumerate(map(bytes, sig[:, b * per : (b + 1) * per])):
-            buckets.setdefault(key, []).append(int(ids[i]))
-        for members in buckets.values():
-            if 1 < len(members) <= max_bucket:
-                ms = sorted(members)
-                pairs.update((a, c) for j, a in enumerate(ms) for c in ms[j + 1 :])
-    return pairs
 
 
 def planted_links(chains) -> list[tuple[int, int]]:
@@ -220,10 +189,11 @@ def check(d: dict, ref: dict) -> list[str]:
     if got != want:
         diff = [k for k in want.keys() | got.keys() if got.get(k) != want.get(k)]
         errors.append(f"components: {len(diff)} nodes differ from union-find over the pairs")
-    missing = [p for p in map(tuple, ref["expected_links"]) if p not in seen]
-    if missing:
-        errors.append(f"{len(missing)} planted links in a shared LSH bucket not emitted, "
-                      f"e.g. {missing[0]}")
+    # a document in no pair is a cluster of its own
+    split = [c for c in ref["chains"] if len({got.get(str(x), ("alone", x)) for x in c}) > 1]
+    if split:
+        errors.append(f"{len(split)} of {len(ref['chains'])} planted chains split over "
+                      f"more than one cluster, e.g. {split[0]}")
     return errors[:10]
 
 

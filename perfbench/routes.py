@@ -1,10 +1,9 @@
 """``routes`` workload: synthetic bus-route pages -> PTV2 route mode
-(150 m gap) -> H3/S2 tiles of every node -> the district polygon of
-every stop; the traced run adds the exact 1-NN stop of each query node.
+(150 m gap) -> H3/S2 tiles of every node; the traced run adds the exact
+1-NN stop of each query node.
 
 Why: the historical headline. Extraction and open-chain stitching of
-20-way groups dominate the engine part, so stitch and extraction gains
-show here; the point-in-polygon join carries the join-strategy cost.
+20-way groups dominate it, so stitch and extraction gains show here.
 
 The exact kNN cascade (knn_join's default exact_fallback=True) is timed
 only in the traced run: it costs about 90 Spark jobs and 40 s on a
@@ -19,11 +18,11 @@ import sys
 import numpy as np
 
 from .common import (
-    GAP_M, Layers, dangling_refs, materialize, mix_col, mix_np, seq_hash_col,
-    seq_hash_py, stitch_counters, write_rows,
+    GAP_M, Layers, dangling_refs, materialize, mix_col, mix_np, seq_hash_col, seq_hash_py,
+    stitch_counters,
 )
 
-N_ROUTES = 500
+N_ROUTES = 300
 ROUTES_PER_TASK = 125  # synth_pages_spark's block size; the reference replays it
 H3_RES, S2_LEVEL = 9, 16
 #: Query and stop selection: a multiplicative hash of the node id below a
@@ -31,19 +30,22 @@ H3_RES, S2_LEVEL = 9, 16
 Q_MULT, Q_FRAC = 2654435761, 0.005
 S_MULT, S_FRAC = 2246822519, 0.05
 DIST_TOL_M = 1e-6
-#: Districts: a GRID x GRID tiling of jittered quadrilaterals over the
-#: generator's bounding box plus a margin (the routes random-walk out).
-GRID, MARGIN = 6, 0.5
+
+#: Timed jobs per run at least: records_per_s is their median.
+MIN_JOBS = 3
 
 
 def key() -> dict:
-    """Input cache key: generator sources and input size."""
+    """Input cache key: the sources of the generator and of everything
+    ``reference`` computes with, and the input size."""
+    from osmptparser_spark.functions import h3x, s2x, tagfilter
+    from osmptparser_spark.operators import stitch_core
     from osmptparser_spark.sources import pages, synth
 
     from . import common
 
-    return {"gen": common.source_digest(sys.modules[__name__], synth, pages),
-            "routes": N_ROUTES, "grid": GRID}
+    mods = (sys.modules[__name__], common, synth, pages, stitch_core, tagfilter, h3x, s2x)
+    return {"gen": common.source_digest(*mods), "routes": N_ROUTES}
 
 
 def _selected(ids, mult: int, frac: float):
@@ -89,29 +91,6 @@ def _entities(seed: int):
     return nodes, ways, rels
 
 
-def _districts(seed: int) -> list[tuple[int, list[tuple[float, float]]]]:
-    """-> [(poly_id, closed ring of (lon, lat))]: jittered grid vertices
-    shared by neighbouring cells, so the districts tile the box."""
-    from osmptparser_spark.sources.synth import BBOX
-
-    rng = np.random.default_rng(seed + 104_729)
-    lat_min, lat_max, lon_min, lon_max = BBOX
-    lat = np.linspace(lat_min - MARGIN, lat_max + MARGIN, GRID + 1)
-    lon = np.linspace(lon_min - MARGIN, lon_max + MARGIN, GRID + 1)
-    step = (lat[1] - lat[0]) * 0.3
-    jit = rng.uniform(-step, step, (GRID + 1, GRID + 1, 2))
-    jit[[0, -1], :, 0] = 0  # keep the outer border straight
-    jit[:, [0, -1], 1] = 0
-    out = []
-    for i in range(GRID):
-        for j in range(GRID):
-            corners = [(i, j), (i + 1, j), (i + 1, j + 1), (i, j + 1), (i, j)]
-            ring = [(float(lon[b] + jit[a, b, 1]), float(lat[a] + jit[a, b, 0]))
-                    for a, b in corners]
-            out.append((i * GRID + j, ring))
-    return out
-
-
 def haversine_m(lat1, lon1, lat2, lon2):
     lat1, lon1, lat2, lon2 = map(np.radians, (lat1, lon1, lat2, lon2))
     a = (np.sin((lat2 - lat1) / 2) ** 2
@@ -119,22 +98,10 @@ def haversine_m(lat1, lon1, lat2, lon2):
     return 2 * 6_371_000.0 * np.arctan2(np.sqrt(a), np.sqrt(1 - a))
 
 
-def ray_cast(px, py, rx, ry):
-    """Even-odd rule of points (px, py) against a closed ring (rx, ry)."""
-    inside = np.zeros(len(px), dtype=bool)
-    for i in range(len(rx) - 1):
-        xa, ya, xb, yb = rx[i], ry[i], rx[i + 1], ry[i + 1]
-        crosses = (ya > py) != (yb > py)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            x_at = (xb - xa) * (py - ya) / (yb - ya) + xa
-        inside ^= crosses & (px < x_at)
-    return inside
-
-
 def reference(seed: int) -> dict:
     """Expected outputs, computed on the driver without Spark: stitch_core
-    over the regenerated entities, direct h3x/s2x encodes, brute-force
-    haversine kNN and a ray cast per district."""
+    over the regenerated entities, direct h3x/s2x encodes and a
+    brute-force haversine kNN."""
     from osmptparser_spark.functions import h3x, s2x
     from osmptparser_spark.functions.tagfilter import PTV2_FILTER, tag_filter_py
     from osmptparser_spark.operators import stitch_core
@@ -171,24 +138,11 @@ def reference(seed: int) -> dict:
         best = float(d.min())
         knn[str(qi)] = [best, s_ids[d <= best + DIST_TOL_M].tolist()]
 
-    pip_a, pip_b, candidates = [], [], 0
-    for poly_id, ring in _districts(seed):
-        rx = np.array([p[0] for p in ring])
-        ry = np.array([p[1] for p in ring])
-        box = ((s_lat >= ry.min()) & (s_lat <= ry.max())
-               & (s_lon >= rx.min()) & (s_lon <= rx.max()))
-        candidates += int(box.sum())
-        hit = s_ids[box][ray_cast(s_lon[box], s_lat[box], rx, ry)]
-        pip_a += hit.tolist()
-        pip_b += [poly_id] * len(hit)
-    return {
-        "relations": expect, "tiles": tiles, "knn": knn,
-        "pip": [len(pip_a), mix_np(pip_a, pip_b)], "bbox_candidates": candidates,
-    }
+    return {"relations": expect, "tiles": tiles, "knn": knn}
 
 
 def load(spark, path: str):
-    return spark.read.parquet(path + "/pages"), spark.read.parquet(path + "/districts")
+    return spark.read.parquet(path)
 
 
 def generate(spark, path: str, seed: int):
@@ -196,11 +150,8 @@ def generate(spark, path: str, seed: int):
 
     synth_pages_spark(
         spark, n_routes=N_ROUTES, routes_per_task=ROUTES_PER_TASK, seed=seed
-    ).repartition(8).write.parquet(path + "/pages")
-    rows = [(pid, [{"lon": x, "lat": y} for x, y in ring]) for pid, ring in _districts(seed)]
-    write_rows(spark, rows, "poly_id BIGINT, ring ARRAY<STRUCT<lon: DOUBLE, lat: DOUBLE>>",
-               path + "/districts", files=1)
-    return spark.read.parquet(path + "/pages").count(), reference(seed)
+    ).repartition(8).write.parquet(path)
+    return spark.read.parquet(path).count(), reference(seed)
 
 
 # --- job ----------------------------------------------------------------------------
@@ -216,10 +167,12 @@ def _extract(pages):
     return relations, extract_ways_sql(pages), extract_nodes_sql(pages)
 
 
-def digest(pts, tiled, pip, knn=None) -> dict:
-    """Small collected digest of the job's full output (``knn``: traced run)."""
+def digest(outputs) -> dict:
+    """Small collected digest of the job's full output: ``(pts, tiled)``,
+    plus ``knn`` in the traced run."""
     from pyspark.sql import functions as F
 
+    pts, tiled, knn = (*outputs, None)[:3]
     rel = pts.select(
         "id", "status_code", seq_hash_col("node_seq"), F.size(F.flatten("geometry")),
         seq_hash_col(F.transform("stops", lambda s: s["id"])),
@@ -230,64 +183,41 @@ def digest(pts, tiled, pip, knn=None) -> dict:
         F.sum(mix_col(F.col("s2_cell"), F.col("id"))),
     ).collect()[0]
     k = [] if knn is None else knn.select("query_id", "cand_id", "dist_m").collect()
-    p = pip.agg(
-        F.count(F.lit(1)), F.sum(mix_col(F.col("point_id"), F.col("poly_id")))
-    ).collect()[0]
     return {
         "relations": {str(r[0]): [r[1], r[2], r[3], r[4]] for r in rel},
         "tiles": [int(x or 0) for x in t],
         "knn": [[int(r[0]), int(r[1]), float(r[2])] for r in k],
-        "pip": [int(x or 0) for x in p],
     }
 
 
-def job(spark, inp) -> dict:
-    """The timed job; -> digest of its full output."""
+def job(spark, pages) -> tuple:
+    """The timed job; -> its outputs, materialized, for ``digest``."""
     from osmptparser_spark.engine import get_public_transports
     from osmptparser_spark.functions.tagfilter import PTV2_FILTER
     from osmptparser_spark.functions.tiling import with_cells
-    from osmptparser_spark.operators.spatial import point_in_polygon_join
 
-    pages, districts = inp
-    relations, ways, nodes = _extract(pages)
-    # relations: pushdown barrier for the exact tag filter (see
-    # engine._barrier); nodes: read by hydration, tiling and PIP.
-    # Both are materialized first: concurrent query stages racing an
-    # unbuilt cache would each recompute the extraction.
-    relations, nodes = materialize(relations)[0], materialize(nodes)[0]
+    # the extracted tables are materialized first, as the traced pages
+    # layer does: the engine reads each of them in several branches
+    # (relations also as the pushdown barrier of the exact tag filter,
+    # see engine._barrier), and every branch would redo the extraction
+    relations, ways, nodes = (materialize(df)[0] for df in _extract(pages))
     pts = get_public_transports(nodes, ways, relations, GAP_M, PTV2_FILTER)
     tiled = with_cells(nodes, h3_res=H3_RES, s2_level=S2_LEVEL)
-    pip = point_in_polygon_join(_select_col(nodes, S_MULT, S_FRAC), districts)
-    return digest(pts, tiled, pip)
+    return materialize(pts)[0], materialize(tiled)[0]
 
 
-def warm_up(spark, inp) -> None:
-    """The job over a 1/16 slice of the pages: the timed jobs then run
-    with warm Python workers and compiled code on every layer."""
-    from pyspark.sql import functions as F
-
-    from .common import clear_caches
-
-    pages, districts = inp
-    job(spark, (pages.filter(F.crc32("url") % 16 == 0), districts))
-    clear_caches(spark)
-
-
-def traced(layers: Layers, inp, n_pages: int, ref: dict) -> dict:
+def traced(layers: Layers, pages, n_pages: int, ref: dict) -> dict:
     """The job layer by layer, each public call on the previous layer's
     materialized output."""
-    from pyspark.sql import functions as F
-
     from osmptparser_spark.engine import filter_relations, get_public_transports
     from osmptparser_spark.functions.tagfilter import PTV2_FILTER
     from osmptparser_spark.functions.tiling import with_cells
     from osmptparser_spark.operators.hydrate import (
         hydrate_stops, hydrated_node_rows, semi_join_ways,
     )
-    from osmptparser_spark.operators.spatial import knn_join, point_in_polygon_join
+    from osmptparser_spark.operators.spatial import knn_join
     from osmptparser_spark.operators.stitch import stitch_node_rows_partitioned
 
-    pages, districts = inp
     with layers.tracer.span("pages"):
         relations, ways, nodes = _extract(pages)
         relations = layers.call("pages", "extract_relations",
@@ -326,15 +256,12 @@ def traced(layers: Layers, inp, n_pages: int, ref: dict) -> dict:
                         n_nodes)
     q = _select_col(nodes, Q_MULT, Q_FRAC).cache()
     s = _select_col(nodes, S_MULT, S_FRAC).cache()
-    d = districts.cache()
-    n_q, n_s, n_d = q.count(), s.count(), d.count()
+    n_q, n_s = q.count(), s.count()
     knn = layers.call("knn", "knn_join", lambda: materialize(knn_join(q, s, k=1)), n_q + n_s)
-    pip = layers.call("pip", "point_in_polygon_join",
-                      lambda: materialize(point_in_polygon_join(s, d)), n_s + n_d)
 
     m = layers.metrics
     with layers.instrument():
-        out = digest(pts, tiled, pip, knn)
+        out = digest((pts, tiled, knn))
         dangling = dangling_refs(rel, rel_ways, node_rows, stops)
         codes = [r[0] for r in stitched.select("status_code").collect()]
     extra = {
@@ -345,8 +272,6 @@ def traced(layers: Layers, inp, n_pages: int, ref: dict) -> dict:
         "tiling.distinct_h3": out["tiles"][1],
         "tiling.distinct_s2": out["tiles"][2],
         "knn.pairs_per_query": m["knn"]["rows_out"] / n_q,
-        "pip.candidates": ref["bbox_candidates"],
-        "pip.refine_precision": m["pip"]["rows_out"] / ref["bbox_candidates"],
         **stitch_counters(codes),
     }
     return {"digest": out, "extra": extra, "not_in_job": ["knn"]}
@@ -377,8 +302,6 @@ def check(d: dict, ref: dict) -> list[str]:
         seen.add(str(q))
     if d["knn"] and len(seen) != len(knn):
         errors.append(f"knn: {len(knn) - len(seen & knn.keys())} queries without a result")
-    if list(d["pip"]) != list(ref["pip"]):
-        errors.append(f"pip (pairs, checksum): {d['pip']} != {ref['pip']}")
     return errors[:10]
 
 
