@@ -28,14 +28,16 @@ N_POINTS = 20_000
 LAT0, LON0, SPAN = 40.35, -3.80, 0.20  # city bounding box corner and size (deg)
 REL_ID0, WAY_ID0 = 50_000_000, 10_000_000  # disjoint id ranges: poly ids stay unique
 POLY_RINGS = 16  # poly_id = area id * POLY_RINGS + ring index
+#: Untagged filler nodes and ways pad the city to these totals (above the
+#: most any seed draws), so every seed has the same number of pages.
+N_NODES, N_WAYS = 1_600, 250
 #: Relation park kinds: ordered, member order scrambled (second sweep),
 #: ring end a distinct node near its start (102 on closing), ring end
 #: far from its start (501 on closing), middle member missing (501).
 REL_KINDS = (("ok", 0.55), ("scrambled", 0.15), ("near", 0.15), ("open", 0.10), ("hole", 0.05))
 WAY_KINDS = (("ok", 0.7), ("near", 0.15), ("open", 0.15))
-#: Timed jobs per run at least: records_per_s is their median. The jobs
-#: are short and mostly fixed cost, so it takes more of them to be steady.
-MIN_JOBS = 5
+#: Timed jobs per run at least: records_per_s is their median.
+MIN_JOBS = 3
 
 
 def key() -> dict:
@@ -145,6 +147,11 @@ def _entities(seed: int):
         if rng.random() < 0.2:
             tags = {"landuse": "park"}  # unnamed park: rejected
         city.way([a, b], tags)
+    while len(city.nodes) < N_NODES:
+        city.node(LAT0 + rng.uniform(0, SPAN), LON0 + rng.uniform(0, SPAN))
+    while len(city.ways) < N_WAYS:
+        city.way([int(rng.integers(1, N_NODES + 1)) for _ in range(2)], {})
+    assert len(city.nodes) == N_NODES and len(city.ways) == N_WAYS
     return city.nodes, city.ways, city.rels
 
 
@@ -216,13 +223,13 @@ def load(spark, path: str):
     return spark.read.parquet(path + "/pages"), spark.read.parquet(path + "/points")
 
 
-def generate(spark, path: str, seed: int):
+def generate(path: str, seed: int):
     from osmptparser_spark.sources.pages import PAGES_DDL, entities_to_pages
 
     nodes, ways, rels = _entities(seed)
-    n = write_rows(spark, entities_to_pages(nodes, ways, rels), PAGES_DDL, path + "/pages")
+    n = write_rows(entities_to_pages(nodes, ways, rels), PAGES_DDL, path + "/pages")
     pid, lat, lon = _points(seed)
-    write_rows(spark, list(zip(pid.tolist(), lat.tolist(), lon.tolist())),
+    write_rows(list(zip(pid.tolist(), lat.tolist(), lon.tolist())),
                "id BIGINT, lat DOUBLE, lon DOUBLE", path + "/points")
     return n, reference(seed)
 

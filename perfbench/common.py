@@ -69,15 +69,22 @@ def start_session(n: int):
     return spark
 
 
-def stop_jvm() -> None:
-    """End the Spark JVM this process launched and wait for it: the
-    gateway JVM exits when its stdin closes."""
+def stop_jvm(timeout_s: float = 60.0) -> None:
+    """End the Spark JVM this process launched and wait up to
+    ``timeout_s`` for it: the gateway JVM exits when its stdin closes.
+    ``meter.end_descendants`` then stops whatever is left."""
+    import subprocess
+
     from pyspark import SparkContext
 
     proc = getattr(SparkContext._gateway, "proc", None)
-    if proc is not None:
+    if proc is None:
+        return
+    try:
         proc.stdin.close()
-        proc.wait(timeout=60)
+        proc.wait(timeout=timeout_s)
+    except (OSError, subprocess.TimeoutExpired):
+        pass
 
 
 # --- input cache -----------------------------------------------------------------
@@ -159,11 +166,25 @@ def ensure_input(workload: str, key: dict, generate) -> Input:
     return Input(data, rows, ref)
 
 
-def write_rows(spark, rows, ddl: str, path: str, files: int = 8) -> int:
-    """Write driver-side rows as ``files`` parquet files; -> row count."""
-    from osmptparser_spark.session import local_df
+def write_rows(rows, ddl: str, path: str, files: int = 8) -> int:
+    """Write driver-side row tuples as ``files`` parquet files, row i in
+    file i % files, with pyarrow (no Spark job); -> row count. ``ddl``
+    is a flat Spark DDL of STRING, BIGINT, DOUBLE, TIMESTAMP (UTC) and
+    BINARY columns."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    local_df(spark, rows, ddl).repartition(files).write.parquet(path)
+    types = {"STRING": pa.string(), "BIGINT": pa.int64(), "DOUBLE": pa.float64(),
+             "TIMESTAMP": pa.timestamp("us", tz="UTC"), "BINARY": pa.binary()}
+    schema = pa.schema([(name, types[t]) for name, t in
+                        (col.split() for col in ddl.split(","))])
+    os.makedirs(path)
+    for k in range(files):
+        part = rows[k::files]
+        cols = list(zip(*part)) if part else [()] * len(schema)
+        table = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, schema)], schema=schema)
+        pq.write_table(table, os.path.join(path, f"part-{k:05d}.parquet"))
     return len(rows)
 
 

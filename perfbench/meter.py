@@ -9,6 +9,7 @@ The whole-tree CPU, steal and capacity-probe helpers are ``bench.py``'s.
 from __future__ import annotations
 
 import os
+import signal
 import time
 from contextlib import contextmanager
 
@@ -113,6 +114,56 @@ def tree_peak_rss_mb() -> float:
         except OSError:
             continue
     return total_kb / 1024
+
+
+# --- process lifetime ------------------------------------------------------------
+
+_PR_SET_CHILD_SUBREAPER = 36
+
+
+def adopt_orphans() -> None:
+    """Make this process the child subreaper of its tree: a descendant
+    whose parent exits (the PySpark daemon and its workers outlive the
+    JVM that forked them) is re-parented here rather than to init, so
+    ``end_descendants`` still finds it and can reap it."""
+    import ctypes
+
+    libc = ctypes.CDLL(None, use_errno=True)
+    if libc.prctl(_PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0) != 0:
+        raise OSError(ctypes.get_errno(), "prctl(PR_SET_CHILD_SUBREAPER) failed")
+
+
+def _reap_children() -> None:
+    while True:
+        try:
+            pid, _ = os.waitpid(-1, os.WNOHANG)
+        except ChildProcessError:
+            return
+        if pid == 0:
+            return
+
+
+def end_descendants(grace_s: float = 10.0) -> None:
+    """Stop every process below this one and wait until each has ended:
+    SIGTERM, then SIGKILL to whatever is left after ``grace_s``. Orphans
+    come back here (``adopt_orphans``) and are reaped."""
+    me = os.getpid()
+    deadline = time.monotonic() + grace_s
+    signalled: set[tuple[int, int]] = set()
+    while True:
+        _reap_children()
+        pids = [p for p in _descendants(_proc_table(), me) if p != me]
+        if not pids:
+            return
+        sig = signal.SIGKILL if time.monotonic() > deadline else signal.SIGTERM
+        for pid in pids:
+            if (pid, sig) not in signalled:
+                signalled.add((pid, sig))
+                try:
+                    os.kill(pid, sig)
+                except ProcessLookupError:
+                    pass
+        time.sleep(0.05)
 
 
 # --- Spark status store ---------------------------------------------------------

@@ -101,11 +101,11 @@ def _corpus(seed: int):
     return shuffled, [[int(perm[i]) for i in c] for c in chains]
 
 
-def generate(spark, path: str, seed: int):
+def generate(path: str, seed: int):
     """Corpus plus reference: the texts, for exact Jaccard, and the
     planted chains, each of which must come out as one cluster."""
     texts, chains = _corpus(seed)
-    n = write_rows(spark, list(enumerate(texts)), "doc_id BIGINT, text STRING", path)
+    n = write_rows(list(enumerate(texts)), "doc_id BIGINT, text STRING", path)
     return n, {"chains": chains, "texts": texts}
 
 

@@ -19,7 +19,7 @@ import numpy as np
 
 from .common import (
     GAP_M, Layers, dangling_refs, materialize, mix_col, mix_np, seq_hash_col, seq_hash_py,
-    stitch_counters,
+    stitch_counters, write_rows,
 )
 
 N_ROUTES = 300
@@ -63,13 +63,13 @@ def _select_col(df, mult: int, frac: float):
 # --- input + reference --------------------------------------------------------------
 
 
-def _entities(seed: int):
-    """The entities synth_pages_spark packs for (N_ROUTES, seed): one
-    synth_geo_entities block per task, seeded seed+block, ids offset by
-    block exactly as the generator does."""
+def _blocks(seed: int):
+    """The entity blocks synth_pages_spark generates for (N_ROUTES, seed):
+    one synth_geo_entities block per task, seeded seed+block, ids offset
+    by block exactly as the generator does; yields (block, nodes, ways,
+    relations)."""
     from osmptparser_spark.sources.synth import synth_geo_entities
 
-    nodes, ways, rels = [], [], []
     n_blocks = (N_ROUTES + ROUTES_PER_TASK - 1) // ROUTES_PER_TASK
     for blk in range(n_blocks):
         count = min(ROUTES_PER_TASK, N_ROUTES - blk * ROUTES_PER_TASK)
@@ -85,6 +85,12 @@ def _entities(seed: int):
             r["id"] += off
             r["way_refs"] = [w + wid_off for w in r["way_refs"]]
             r["stop_refs"] = [s + nid_off for s in r["stop_refs"]]
+        yield blk, bn, bw, br
+
+
+def _entities(seed: int):
+    nodes, ways, rels = [], [], []
+    for _, bn, bw, br in _blocks(seed):
         nodes += bn
         ways += bw
         rels += br
@@ -145,13 +151,24 @@ def load(spark, path: str):
     return spark.read.parquet(path)
 
 
-def generate(spark, path: str, seed: int):
-    from osmptparser_spark.sources.synth import synth_pages_spark
+def pages_rows(seed: int) -> list[tuple]:
+    """The page rows synth_pages_spark(N_ROUTES, ROUTES_PER_TASK, seed)
+    emits, built on the driver: each block packed by entities_to_pages,
+    its urls namespaced by block. Writing them with pyarrow spares the
+    run a cold Python-worker job before set-up."""
+    from osmptparser_spark.sources.pages import entities_to_pages
 
-    synth_pages_spark(
-        spark, n_routes=N_ROUTES, routes_per_task=ROUTES_PER_TASK, seed=seed
-    ).repartition(8).write.parquet(path)
-    return spark.read.parquet(path).count(), reference(seed)
+    return [
+        (url.replace(".test/", f".test/b{blk}/"), ts, html, text, lang)
+        for blk, bn, bw, br in _blocks(seed)
+        for url, ts, html, text, lang in entities_to_pages(bn, bw, br)
+    ]
+
+
+def generate(path: str, seed: int):
+    from osmptparser_spark.sources.pages import PAGES_DDL
+
+    return write_rows(pages_rows(seed), PAGES_DDL, path), reference(seed)
 
 
 # --- job ----------------------------------------------------------------------------

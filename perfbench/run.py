@@ -25,6 +25,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import signal
 import statistics
 import sys
 import time
@@ -296,21 +297,31 @@ def main(argv=None) -> int:
     if MISSING is not None:
         print(f"perfbench: cannot import the engine: {MISSING}", file=sys.stderr)
         return 2
+    # every process the run starts ends before it returns, on every path
+    # out: SIGTERM unwinds through the finally below
+    meter.adopt_orphans()
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
+    try:
+        result = run(args)
+    finally:
+        signal.signal(signal.SIGTERM, signal.SIG_IGN)
+        common.stop_jvm()
+        meter.end_descendants()
+    print(json.dumps(result))
+    return 0
+
+
+def run(args) -> dict:
+    """One run of ``args.workload``; its record goes to .perfbench/runs/."""
     mod = _workload(args.workload)
     n = meter.nproc()
     common.prepare_env(n)
     record = {"workload": args.workload, "seed": args.seed, "trace": args.trace,
               "nproc": n, "started": time.time()}
     # prepare (not part of setup_s): validate the cached input and its
-    # reference, or build them in a session of their own
-    def generate(path: str):
-        spark = common.start_session(n)
-        try:
-            return mod.generate(spark, path, args.seed)
-        finally:
-            spark.stop()
-
-    inp = common.ensure_input(args.workload, {**mod.key(), "seed": args.seed}, generate)
+    # reference, or build them on the driver
+    inp = common.ensure_input(args.workload, {**mod.key(), "seed": args.seed},
+                              lambda path: mod.generate(path, args.seed))
     record["prepare_s"] = time.time() - record["started"]
     result = (traced if args.trace else timed)(args, mod, inp, n, record)
     record["total_s"] = time.time() - record["started"]
@@ -322,9 +333,7 @@ def main(argv=None) -> int:
     )
     with open(path, "w") as f:
         json.dump(record, f, indent=1, default=str)
-    common.stop_jvm()
-    print(json.dumps(result))
-    return 0
+    return result
 
 
 if __name__ == "__main__":
