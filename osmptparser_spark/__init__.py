@@ -4,7 +4,7 @@ A from-scratch re-expression of the query/data-processing capabilities of
 ``cualbondi/osmptparser`` (reference at /root/reference, Rust) on Apache
 Spark DataFrames: tag-predicate filters, semi-joins, order-preserving
 relation hydration, the greedy way-stitching / gap-fix heuristic
-(grouped pandas UDFs), H3/S2 tiling, salted spatial joins, point-in-
+(a partition-level pandas UDF), H3/S2 tiling, salted spatial joins, point-in-
 polygon, kNN, raster<->vector aggregation, plus web-scale text-pipeline
 operators (dedup, similarity search, language-ID, quality scoring).
 

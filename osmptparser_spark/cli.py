@@ -56,14 +56,12 @@ def build_parser() -> argparse.ArgumentParser:
 
 
 def load_entities(spark, args):
+    """Entity tables for the pbf / entities input formats (pages input
+    goes through the engine's pages entries instead)."""
     if args.input_format == "pbf":
         from .sources.pbf import read_pbf_spark
 
         return read_pbf_spark(spark, args.input)
-    if args.input_format == "pages":
-        from .sources.pages import extract_all
-
-        return extract_all(spark.read.parquet(args.input))
     nodes = spark.read.parquet(f"{args.input}/nodes")
     ways = spark.read.parquet(f"{args.input}/ways")
     relations = spark.read.parquet(f"{args.input}/relations")
@@ -72,22 +70,27 @@ def load_entities(spark, args):
 
 def main(argv=None) -> int:
     args = build_parser().parse_args(argv)
-    from .engine import get_areas, get_public_transports
+    from .engine import areas_from_pages, get_areas, get_public_transports, routes_from_pages
     from .functions.tagfilter import PTV2_FILTER, PTV2_FILTER_STRICT
     from .session import get_spark
     from .sources.geojson import area_geojson, public_transport_geojson, write_geojson
 
     master = f"local[{args.cpus}]" if args.cpus > 0 else None
     spark = get_spark("osmptparser-spark-cli", master=master, profile=args.profile)
-    nodes, ways, relations = load_entities(spark, args)
     if args.filter_ptv2:
-        preset = PTV2_FILTER_STRICT if args.strict_ptv2 else PTV2_FILTER
-        out = get_public_transports(nodes, ways, relations, args.gap, preset)
-        gj = public_transport_geojson(out.orderBy("id"))
+        conditions = PTV2_FILTER_STRICT if args.strict_ptv2 else PTV2_FILTER
+        from_pages, from_entities = routes_from_pages, get_public_transports
+        to_geojson = public_transport_geojson
     else:
-        out = get_areas(nodes, ways, relations, args.gap, args.filter_expr)
-        gj = area_geojson(out.orderBy("id"))
-    write_geojson(gj, args.output)
+        conditions = args.filter_expr
+        from_pages, from_entities = areas_from_pages, get_areas
+        to_geojson = area_geojson
+    if args.input_format == "pages":
+        # the pages entry prefilters relation lines and caches them
+        out = from_pages(spark.read.parquet(args.input), args.gap, conditions)
+    else:
+        out = from_entities(*load_entities(spark, args), args.gap, conditions)
+    write_geojson(to_geojson(out.orderBy("id")), args.output)
     return 0
 
 

@@ -13,16 +13,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .functions.tagfilter import compile_tag_filter
+from .functions.tagfilter import compile_tag_filter, line_prefilter
 from .operators.hydrate import (
-    hydrate_single_ways,
     hydrate_stops,
-    hydrate_way_nodes,
     hydrated_node_rows,
     semi_join_ways,
     single_way_node_rows,
 )
-from .operators.stitch import stitch, stitch_node_rows_partitioned as stitch_node_rows
+from .operators.stitch import stitch_node_rows_partitioned as stitch_node_rows
+from .sources.pages import extract_nodes_sql, extract_relations_sql, extract_ways_sql
 
 _EMPTY_GEOM = "CAST(array() AS ARRAY<ARRAY<STRUCT<lon: DOUBLE, lat: DOUBLE>>>)"
 _EMPTY_SEQ = "CAST(array() AS ARRAY<ARRAY<BIGINT>>)"
@@ -30,6 +29,10 @@ _EMPTY_STOPS = (
     "CAST(array() AS ARRAY<STRUCT<id: BIGINT, lat: DOUBLE, lon: DOUBLE, "
     "tags: MAP<STRING,STRING>>>)"
 )
+_AREA_COLS = [
+    "id", "id_type", "tags", "info", "geometry", "node_seq",
+    "status_code", "status_detail",
+]
 
 
 def filter_relations(relations: DataFrame, conditions: str) -> DataFrame:
@@ -68,115 +71,91 @@ def _finalize(relations: DataFrame, stitched: DataFrame, stops: DataFrame | None
     )
 
 
-def _barrier(df: DataFrame, kind: str) -> DataFrame:
-    """Materialization barrier for the prefiltered relation table.
+def _relation_leg(
+    nodes: DataFrame,
+    ways: DataFrame,
+    relations: DataFrame,
+    gap_m: float,
+    conditions: str | None,
+    closed: bool,
+) -> DataFrame:
+    """filter -> semi-join -> hydrate -> stitch -> finalize for relation
+    geometry; route mode (``closed=False``) also hydrates the stops."""
+    if conditions:
+        rel = filter_relations(relations, conditions)
+    else:
+        rel = relations.filter(F.size("way_refs") > 0)
+    rel_ways = semi_join_ways(ways, rel)
+    stitched = stitch_node_rows(hydrated_node_rows(rel, rel_ways, nodes), gap_m, closed)
+    return _finalize(rel, stitched, None if closed else hydrate_stops(rel, nodes))
 
-    MEMORY CONTRACT: what is materialized is the PREFILTERED relation
-    table — O(filter-matched relations), never O(pages) — so the
-    executor-memory cost is the filtered dimension table, typically
-    10^3-10^6 rows even at web scale (tests assert the measured cache
-    size; see test_spark_pipeline.py::test_cache_barrier_contract).
 
-    * ``"cache"`` (default): storage-level MEMORY; fastest, and the
-      size is observable via the storage registry.
-    * ``"localCheckpoint"``: executor-local checkpoint (memory+disk,
-      lineage truncated) — the constrained-memory deploy choice; lazy,
-      so plan-building stays side-effect free. INCOMPATIBLE with the
-      ``cluster`` profile's ``spark.dynamicAllocation.enabled``: local
-      checkpoint blocks live only on the executors that wrote them, so
-      a decommissioned executor silently destroys them mid-job (Spark's
-      own docs warn against the combination). Under dynamic allocation
-      use ``"cache"`` (recomputable lineage survives executor loss) or
-      a reliable ``df.checkpoint()`` with a checkpoint dir, or raise
-      ``spark.dynamicAllocation.cachedExecutorIdleTimeout`` so holders
-      are never reclaimed.
-    * ``"none"``: no barrier — ONLY for plans where the caller
-      guarantees the exact map filter is cheap, because without the
-      barrier Catalyst merges the exact from_json filter into the
-      line-scan predicate and evaluates it for EVERY line before the
-      cheap string conjuncts can reject it (measured: 240 s -> ~20 s
-      on 80k pages at local[16]).
-    """
-    if kind == "cache":
-        return df.cache()
-    if kind == "localCheckpoint":
-        return df.localCheckpoint(eager=False)
-    if kind == "none":
-        return df
-    raise ValueError(f"unknown barrier {kind!r}")
+def _way_area_leg(
+    nodes: DataFrame, ways: DataFrame, gap_m: float, conditions: str | None
+) -> DataFrame:
+    """Standalone filter-matched ways as closed rings (mod.rs:596-647):
+    each way is a one-way stitch group keyed by its own id."""
+    if conditions:
+        std_ways = filter_ways(ways, conditions)
+    else:
+        std_ways = ways.filter(F.size("refs") > 0)
+    stitched = stitch_node_rows(single_way_node_rows(std_ways, nodes), gap_m, closed=True)
+    return _finalize(std_ways.select("id", "tags", "info"), stitched, None)
+
+
+def _areas(
+    nodes: DataFrame,
+    member_ways: DataFrame,
+    area_ways: DataFrame,
+    relations: DataFrame,
+    gap_m: float,
+    conditions: str | None,
+) -> DataFrame:
+    """Relation areas (id_type 'r', members looked up in
+    ``member_ways``) union way areas (id_type 'w', from ``area_ways``)."""
+    rel_areas = _relation_leg(nodes, member_ways, relations, gap_m, conditions, closed=True)
+    way_areas = _way_area_leg(nodes, area_ways, gap_m, conditions)
+    return rel_areas.withColumn("id_type", F.lit("r")).select(*_AREA_COLS).unionByName(
+        way_areas.withColumn("id_type", F.lit("w")).select(*_AREA_COLS)
+    )
+
+
+def _pages_entities(pages: DataFrame, conditions: str | None):
+    """Extract (nodes, ways, relations) from pages with the tag filter
+    pushed down as a sound string prefilter on raw relation lines (it
+    may only over-select; the exact map filter runs after parsing).
+
+    The prefiltered relations are cached: three consumers reuse them,
+    and the cache is a pushdown barrier — without it Catalyst merges the
+    exact from_json filter into the line-scan predicate and evaluates
+    it for EVERY line before the cheap string conjuncts can reject it
+    (measured: 240 s -> ~20 s on 80k pages at local[16]). MEMORY
+    CONTRACT: the cache holds the PREFILTERED relation table —
+    O(filter-matched relations), never O(pages)
+    (test_spark_pipeline.py::test_cache_barrier_contract asserts the
+    measured size)."""
+    pre = line_prefilter(conditions) if conditions else None
+    relations = extract_relations_sql(pages, line_filter=pre).cache()
+    return extract_nodes_sql(pages), extract_ways_sql(pages), relations, pre
 
 
 def routes_from_pages(
-    pages: DataFrame,
-    gap_m: float = 150.0,
-    conditions: str | None = None,
-    barrier: str = "cache",
+    pages: DataFrame, gap_m: float = 150.0, conditions: str | None = None
 ) -> DataFrame:
-    """pages -> extract -> filter -> stitch, with the tag filter pushed
-    down as a string prefilter on raw relation lines (sound: may only
-    over-select; the exact map filter runs after parsing). Avoids the
-    from_json-in-predicate storm over every line. ``barrier`` picks the
-    materialization barrier for the prefiltered relations (see
-    :func:`_barrier` for the memory contract)."""
-    from .functions.tagfilter import line_prefilter
-    from .sources.pages import (
-        extract_nodes_sql,
-        extract_relations_sql,
-        extract_ways_sql,
-    )
-
-    pre = line_prefilter(conditions) if conditions else None
-    # barrier = reuse (three consumers) + pushdown barrier (_barrier)
-    relations = _barrier(extract_relations_sql(pages, line_filter=pre), barrier)
-    ways = extract_ways_sql(pages)
-    nodes = extract_nodes_sql(pages)
+    """pages -> extract -> :func:`get_public_transports`."""
+    nodes, ways, relations, _ = _pages_entities(pages, conditions)
     return get_public_transports(nodes, ways, relations, gap_m, conditions)
 
 
 def areas_from_pages(
-    pages: DataFrame,
-    gap_m: float = 150.0,
-    conditions: str | None = None,
-    barrier: str = "cache",
+    pages: DataFrame, gap_m: float = 150.0, conditions: str | None = None
 ) -> DataFrame:
-    from .functions.tagfilter import line_prefilter
-    from .sources.pages import (
-        extract_nodes_sql,
-        extract_relations_sql,
-        extract_ways_sql,
-    )
-
-    pre = line_prefilter(conditions) if conditions else None
-    # barrier = reuse + pushdown barrier (see routes_from_pages)
-    relations = _barrier(extract_relations_sql(pages, line_filter=pre), barrier)
-    # way branch needs the tag filter too -> same prefilter on way lines;
-    # the relation-member semi-join re-reads ways unfiltered
-    ways_all = extract_ways_sql(pages)
-    nodes = extract_nodes_sql(pages)
-    rel = filter_relations(relations, conditions) if conditions else relations
-    rel = rel.filter(F.size("way_refs") > 0)
-
-    rel_ways = semi_join_ways(ways_all, rel)
-    node_rows = hydrated_node_rows(rel, rel_ways, nodes)
-    rel_areas = _finalize(rel, stitch_node_rows(node_rows, gap_m, closed=True), None)
-    rel_areas = rel_areas.withColumn("id_type", F.lit("r"))
-    ways_f = extract_ways_sql(pages, line_filter=pre)
-    std_ways = filter_ways(ways_f, conditions) if conditions else ways_f
-    std_ways = std_ways.filter(F.size("refs") > 0)
-    # same partition-level stitch shape as the route path (a single way
-    # is a 1-way group keyed by its own id) — per-group applyInPandas
-    # was the measured 250s->15s bottleneck shape
-    single = single_way_node_rows(std_ways, nodes)
-    way_areas = _finalize(
-        std_ways.select("id", "tags", "info"),
-        stitch_node_rows(single, gap_m, closed=True),
-        None,
-    ).withColumn("id_type", F.lit("w"))
-    cols = [
-        "id", "id_type", "tags", "info", "geometry", "node_seq",
-        "status_code", "status_detail",
-    ]
-    return rel_areas.select(*cols).unionByName(way_areas.select(*cols))
+    """pages -> extract -> :func:`get_areas`, with the same string
+    prefilter on the way lines that feed the way-area branch (relation
+    members are still looked up in the unfiltered ways)."""
+    nodes, ways, relations, pre = _pages_entities(pages, conditions)
+    area_ways = extract_ways_sql(pages, line_filter=pre)
+    return _areas(nodes, ways, area_ways, relations, gap_m, conditions)
 
 
 def par_map(df: DataFrame, fn, schema: str) -> DataFrame:
@@ -220,13 +199,7 @@ def get_public_transports(
     ``conditions`` optionally applies the F1 tag filter here; pass
     pre-filtered relations otherwise.
     """
-    rel = filter_relations(relations, conditions) if conditions else relations
-    rel = rel.filter(F.size("way_refs") > 0)
-    rel_ways = semi_join_ways(ways, rel)
-    node_rows = hydrated_node_rows(rel, rel_ways, nodes)
-    stitched = stitch_node_rows(node_rows, gap_m, closed=False)
-    stops = hydrate_stops(rel, nodes)
-    return _finalize(rel, stitched, stops)
+    return _relation_leg(nodes, ways, relations, gap_m, conditions, closed=False)
 
 
 def get_areas(
@@ -239,21 +212,4 @@ def get_areas(
     """Area mode: relation areas (id_type 'r') union standalone
     filter-matched way areas (id_type 'w'), rings closed within
     tolerance (mod.rs:580-654)."""
-    rel = filter_relations(relations, conditions) if conditions else relations
-    rel = rel.filter(F.size("way_refs") > 0)
-    rel_ways = semi_join_ways(ways, rel)
-    node_rows = hydrated_node_rows(rel, rel_ways, nodes)
-    rel_areas = _finalize(rel, stitch_node_rows(node_rows, gap_m, closed=True), None)
-    rel_areas = rel_areas.withColumn("id_type", F.lit("r"))
-
-    std_ways = filter_ways(ways, conditions) if conditions else ways
-    std_ways = std_ways.filter(F.size("refs") > 0)
-    single = single_way_node_rows(std_ways, nodes)
-    way_areas = _finalize(
-        std_ways.select("id", "tags", "info"),
-        stitch_node_rows(single, gap_m, closed=True),
-        None,
-    ).withColumn("id_type", F.lit("w"))
-
-    cols = ["id", "id_type", "tags", "info", "geometry", "node_seq", "status_code", "status_detail"]
-    return rel_areas.select(*cols).unionByName(way_areas.select(*cols))
+    return _areas(nodes, ways, ways, relations, gap_m, conditions)

@@ -10,11 +10,11 @@ Spark-first equivalents:
   same cascaded filter effect as the reference's 3-pass scan, without
   re-reading the source.
 * J3 (hydration) preserves member order without per-row Python:
-  ``posexplode`` keeps the ordinal, inner joins drop dangling refs
-  (mod.rs:672,680 semantics), and ``array_sort(collect_list(struct(pos,
-  ...)))`` regroups in order. This groupBy is the one wide shuffle of
-  the core pipeline; it shuffles only (rel_id, pos, id, lat, lon)
-  tuples — a few dozen bytes per node ref.
+  ``posexplode`` keeps the ordinals and inner joins drop dangling refs
+  (mod.rs:672,680 semantics). The flat (rel_id, way_pos, node_pos, id,
+  lat, lon) rows — a few dozen bytes per node ref — go straight to the
+  stitch stage, whose repartition by rel_id is the one wide shuffle of
+  the core pipeline. Stops regroup with ``array_sort`` on the ordinal.
 """
 
 from __future__ import annotations
@@ -52,8 +52,8 @@ def hydrated_node_rows(
 ) -> DataFrame:
     """J3, fused form: the exploded (rel_id, way_pos, node_pos, node_id,
     lat, lon) rows with dangling refs dropped — no regroup shuffle; the
-    stitch UDF groups by rel_id directly and rebuilds way order from
-    (way_pos, node_pos). One shuffle less than hydrate_way_nodes."""
+    stitch stage partitions by rel_id and rebuilds way order from
+    (way_pos, node_pos)."""
     rel_ways = relations.select(
         F.col("id").alias("rel_id"),
         F.posexplode("way_refs").alias("way_pos", "way_id"),
@@ -73,56 +73,11 @@ def hydrated_node_rows(
     ).select("rel_id", "way_pos", "node_pos", "node_id", "lat", "lon")
 
 
-def hydrate_way_nodes(
-    relations: DataFrame, ways: DataFrame, nodes: DataFrame
-) -> DataFrame:
-    """J3: one row per (rel_id, way_pos) with ordered node id/lat/lon arrays.
-
-    Inner joins implement the reference's drop-dangling-refs semantics;
-    member ways whose refs ALL dangle simply produce no row (the
-    reference would panic on them inside first_pass — SURVEY §2.1
-    quirk 7 — so dropping is the documented divergence).
-    """
-    rel_ways = relations.select(
-        F.col("id").alias("rel_id"),
-        F.posexplode("way_refs").alias("way_pos", "way_id"),
-    ).join(
-        ways.select(F.col("id").alias("way_id"), "refs"),
-        "way_id",
-        "inner",
-    )
-    way_nodes = rel_ways.select(
-        "rel_id",
-        "way_pos",
-        F.posexplode("refs").alias("node_pos", "node_id"),
-    ).join(
-        nodes.select(F.col("id").alias("node_id"), "lat", "lon"),
-        "node_id",
-        "inner",
-    )
-    return (
-        way_nodes.groupBy("rel_id", "way_pos")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("node_pos", "node_id", "lat", "lon"))
-            ).alias("nds")
-        )
-        .select(
-            "rel_id",
-            "way_pos",
-            F.transform("nds", lambda x: x["node_id"]).alias("node_ids"),
-            F.transform("nds", lambda x: x["lat"]).alias("lats"),
-            F.transform("nds", lambda x: x["lon"]).alias("lons"),
-        )
-    )
-
-
 def single_way_node_rows(ways: DataFrame, nodes: DataFrame) -> DataFrame:
     """Flat (rel_id=way id, way_pos=0, node_pos, node_id, lat, lon) rows
     for standalone filter-matched ways (area branch, mod.rs:596-647) —
-    the input shape of ``stitch_node_rows_partitioned``. Replaces the
-    hydrate_single_ways + per-group stitch() shape on the hot path:
-    no regroup shuffle here, one partition-level Arrow pass there."""
+    the input shape of ``stitch_node_rows_partitioned``: each way is a
+    one-way group keyed by its own id."""
     return ways.select(
         F.col("id").alias("rel_id"),
         F.lit(0).alias("way_pos"),
@@ -134,35 +89,6 @@ def single_way_node_rows(ways: DataFrame, nodes: DataFrame) -> DataFrame:
     ).select("rel_id", "way_pos", "node_pos", "node_id", "lat", "lon")
 
 
-def hydrate_single_ways(ways: DataFrame, nodes: DataFrame) -> DataFrame:
-    """J3 for standalone filter-matched ways (area branch, mod.rs:596-647):
-    each way is its own stitch group keyed by way id."""
-    way_nodes = ways.select(
-        F.col("id").alias("rel_id"),
-        F.lit(0).alias("way_pos"),
-        F.posexplode("refs").alias("node_pos", "node_id"),
-    ).join(
-        nodes.select(F.col("id").alias("node_id"), "lat", "lon"),
-        "node_id",
-        "inner",
-    )
-    return (
-        way_nodes.groupBy("rel_id", "way_pos")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("node_pos", "node_id", "lat", "lon"))
-            ).alias("nds")
-        )
-        .select(
-            "rel_id",
-            "way_pos",
-            F.transform("nds", lambda x: x["node_id"]).alias("node_ids"),
-            F.transform("nds", lambda x: x["lat"]).alias("lats"),
-            F.transform("nds", lambda x: x["lon"]).alias("lons"),
-        )
-    )
-
-
 def hydrate_stops(relations: DataFrame, nodes: DataFrame) -> DataFrame:
     """Ordered stop-node hydration: one row per relation with
     stops ARRAY<STRUCT<id,lat,lon,tags>> in member order, dangling
@@ -171,9 +97,7 @@ def hydrate_stops(relations: DataFrame, nodes: DataFrame) -> DataFrame:
         F.col("id").alias("rel_id"),
         F.posexplode("stop_refs").alias("stop_pos", "node_id"),
     ).join(
-        nodes.select(F.col("node_id"), "lat", "lon", "tags")
-        if "node_id" in nodes.columns
-        else nodes.select(F.col("id").alias("node_id"), "lat", "lon", "tags"),
+        nodes.select(F.col("id").alias("node_id"), "lat", "lon", "tags"),
         "node_id",
         "inner",
     )

@@ -1,16 +1,15 @@
-"""Grouped-pandas-UDF stitch stage (G1-G9 as applyInPandas).
+"""Partition-level pandas stitch stage (G1-G9 as mapInPandas).
 
 The reference runs ``flatten_ways`` per relation on a work-stealing
-thread pool (mod.rs:532-576). Here each route relation is one group of
-a ``groupBy(rel_id).applyInPandas`` — parallelism across relations is
-Spark task scheduling, per-group data is tiny (a route's ways), and the
-sequential greedy heuristic runs on plain Python tuples inside the
-worker. Arrow moves the grouped arrays in one batch per group set.
+thread pool (mod.rs:532-576). Here the hydrated node rows are
+repartitioned by ``rel_id`` and sorted within partitions, and one
+``mapInPandas`` call stitches every relation of an Arrow batch —
+parallelism across relations is Spark task scheduling, and the
+sequential greedy heuristic (``stitch_core.flatten``, the scalar
+reference) runs on plain Python tuples inside the worker.
 """
 
 from __future__ import annotations
-
-from typing import Iterable
 
 import pandas as pd
 
@@ -24,89 +23,6 @@ STITCH_SCHEMA = (
     "node_seq ARRAY<ARRAY<BIGINT>>, "
     "status_code INT, status_detail STRING"
 )
-
-
-def _stitch_group(pdf: pd.DataFrame, gap_m: float, closed: bool) -> pd.DataFrame:
-    pdf = pdf.sort_values("way_pos")
-    ways = []
-    for ids, lats, lons in zip(pdf["node_ids"], pdf["lats"], pdf["lons"]):
-        way = [(int(i), float(la), float(lo)) for i, la, lo in zip(ids, lats, lons)]
-        if way:
-            ways.append(way)
-    geom, (code, detail) = sc.flatten(ways, gap_m, closed)
-    return pd.DataFrame(
-        [
-            {
-                "rel_id": int(pdf["rel_id"].iloc[0]),
-                "geometry": [
-                    [{"lon": n[2], "lat": n[1]} for n in seg] for seg in geom
-                ],
-                "node_seq": [[n[0] for n in seg] for seg in geom],
-                "status_code": code,
-                "status_detail": detail,
-            }
-        ]
-    )
-
-
-def stitch(way_nodes: DataFrame, gap_m: float, closed: bool) -> DataFrame:
-    """Stitch hydrated member ways into per-relation geometry.
-
-    Input: hydrate_way_nodes output (rel_id, way_pos, node_ids, lats,
-    lons). Output: one row per relation with geometry (lon,lat order,
-    relation.rs:52), ordered node-id sequences, and the parse status.
-    """
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _stitch_group(pdf, gap_m, closed)
-
-    return way_nodes.groupBy("rel_id").applyInPandas(fn, STITCH_SCHEMA)
-
-
-def _stitch_node_rows_group(pdf: pd.DataFrame, gap_m: float, closed: bool) -> pd.DataFrame:
-    """Rebuild ordered member ways from flat (way_pos, node_pos) rows —
-    numpy sort + boundary split, no per-row Python — then stitch."""
-    import numpy as np
-
-    wp = pdf["way_pos"].to_numpy()
-    np_ = pdf["node_pos"].to_numpy()
-    order = np.lexsort((np_, wp))
-    wp = wp[order]
-    ids = pdf["node_id"].to_numpy()[order]
-    lats = pdf["lat"].to_numpy()[order]
-    lons = pdf["lon"].to_numpy()[order]
-    bounds = np.flatnonzero(np.diff(wp)) + 1
-    ways = [
-        list(zip(map(int, i), map(float, la), map(float, lo)))
-        for i, la, lo in zip(
-            np.split(ids, bounds), np.split(lats, bounds), np.split(lons, bounds)
-        )
-    ]
-    geom, (code, detail) = sc.flatten(ways, gap_m, closed)
-    return pd.DataFrame(
-        [
-            {
-                "rel_id": int(pdf["rel_id"].iloc[0]),
-                "geometry": [
-                    [{"lon": n[2], "lat": n[1]} for n in seg] for seg in geom
-                ],
-                "node_seq": [[n[0] for n in seg] for seg in geom],
-                "status_code": code,
-                "status_detail": detail,
-            }
-        ]
-    )
-
-
-def stitch_node_rows(node_rows: DataFrame, gap_m: float, closed: bool) -> DataFrame:
-    """Fused stitch over hydrated_node_rows output: a single groupBy
-    shuffle carries flat scalar columns (cheapest Arrow layout) and the
-    UDF rebuilds way order internally."""
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _stitch_node_rows_group(pdf, gap_m, closed)
-
-    return node_rows.groupBy("rel_id").applyInPandas(fn, STITCH_SCHEMA)
 
 
 def _stitch_many(pdf: pd.DataFrame, gap_m: float, closed: bool) -> pd.DataFrame:

@@ -63,11 +63,9 @@ PROFILE_CONFS = {
         "spark.sql.autoBroadcastJoinThreshold": "64m",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "64m",
         # elastic executor pool without an external shuffle service.
-        # NOTE: with dynamic allocation on, engine._barrier's
-        # "localCheckpoint" mode is unsafe (blocks die with reclaimed
-        # executors — see _barrier docstring); keep barrier="cache"
-        # on this profile. cachedExecutorIdleTimeout makes executors
-        # holding cached blocks ineligible for reclaim within 1h.
+        # cachedExecutorIdleTimeout makes executors holding cached
+        # blocks (the pages entries' relation cache) ineligible for
+        # reclaim within 1h.
         "spark.dynamicAllocation.enabled": "true",
         "spark.dynamicAllocation.shuffleTracking.enabled": "true",
         "spark.dynamicAllocation.cachedExecutorIdleTimeout": "3600s",

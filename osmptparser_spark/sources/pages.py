@@ -16,8 +16,8 @@ floats print with ``repr`` round-trip precision so f64 survives exactly.
 extraction recovers ``text`` from ``html`` byte-identically (the
 per-url invariant the north rule demands).
 
-Extraction is ``mapInPandas`` over Arrow batches: pandas string ops +
-batch-level comprehensions, never a per-row Spark UDF. At 100 TB scale
+Extraction is pure Catalyst expressions (substring, split, from_json)
+inside whole-stage codegen — no Python on the hot path. At 100 TB scale
 this stage is embarrassingly parallel (no shuffle); entity outputs go
 straight into the semi-join/hydration pipeline.
 """
@@ -26,7 +26,7 @@ from __future__ import annotations
 
 import json
 from datetime import datetime, timezone
-from typing import Dict, Iterable, Iterator, List, Tuple
+from typing import Dict, Iterable, List, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,8 +44,6 @@ RELATIONS_DDL = (
     "id BIGINT, tags MAP<STRING,STRING>, info MAP<STRING,STRING>, "
     "way_refs ARRAY<BIGINT>, stop_refs ARRAY<BIGINT>"
 )
-
-_DECODER = json.JSONDecoder()
 
 
 def canonical_json(d: Dict[str, str]) -> str:
@@ -124,136 +122,42 @@ def pages_df(spark: SparkSession, pages) -> DataFrame:
     return local_df(spark, pages, PAGES_DDL)
 
 
-# --- extraction (W1) -----------------------------------------------------------
-
-
-def extract_text_from_html(html_series):
-    """Vectorized recovery of ``text`` from ``html`` (byte-identical)."""
-    s = html_series.apply(lambda b: bytes(b).decode("utf-8"))
-    return s.str.slice(len(PAGE_PREFIX), -len(PAGE_SUFFIX))
-
-
-def _parse_json_tail(rest: str, n_json: int) -> List[dict]:
-    """Parse ``|``-separated JSON objects robustly (values may contain
-    pipes): raw_decode each object, expect a '|' between them."""
-    out = []
-    pos = 0
-    for i in range(n_json):
-        obj, end = _DECODER.raw_decode(rest, pos)
-        out.append(obj)
-        pos = end + 1  # skip the separating '|'
-    return out
-
-
-def _ids(s: str) -> List[int]:
-    return [int(x) for x in s.split(",")] if s else []
-
-
-def _iter_lines(pdf, from_html: bool):
-    if from_html:
-        texts = extract_text_from_html(pdf["html"])
-    else:
-        texts = pdf["text"]
-    for text in texts:
-        for line in text.split("\n"):
-            yield line
-
-
-def extract_nodes(pages: DataFrame, from_html: bool = True) -> DataFrame:
-    import pandas as pd
-
-    def gen(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            rows = []
-            for line in _iter_lines(pdf, from_html):
-                if not line.startswith("OSMNODE|"):
-                    continue
-                _, nid, lat, lon, tags_json = line.split("|", 4)
-                rows.append((int(nid), float(lat), float(lon), json.loads(tags_json)))
-            yield pd.DataFrame(rows, columns=["id", "lat", "lon", "tags"])
-
-    return pages.mapInPandas(gen, NODES_DDL)
-
-
-def extract_ways(pages: DataFrame, from_html: bool = True) -> DataFrame:
-    import pandas as pd
-
-    def gen(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            rows = []
-            for line in _iter_lines(pdf, from_html):
-                if not line.startswith("OSMWAY|"):
-                    continue
-                _, wid, refs, rest = line.split("|", 3)
-                tags, info = _parse_json_tail(rest, 2)
-                rows.append((int(wid), tags, info, _ids(refs)))
-            yield pd.DataFrame(rows, columns=["id", "tags", "info", "refs"])
-
-    return pages.mapInPandas(gen, WAYS_DDL)
-
-
-def extract_relations(pages: DataFrame, from_html: bool = True) -> DataFrame:
-    import pandas as pd
-
-    def gen(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            rows = []
-            for line in _iter_lines(pdf, from_html):
-                if not line.startswith("OSMREL|"):
-                    continue
-                _, rid, way_refs, stop_refs, rest = line.split("|", 4)
-                tags, info = _parse_json_tail(rest, 2)
-                rows.append((int(rid), tags, info, _ids(way_refs), _ids(stop_refs)))
-            yield pd.DataFrame(
-                rows, columns=["id", "tags", "info", "way_refs", "stop_refs"]
-            )
-
-    return pages.mapInPandas(gen, RELATIONS_DDL)
-
-
-# --- JVM-side (pure Catalyst) extraction ----------------------------------------
+# --- extraction (W1): pure Catalyst --------------------------------------------
 #
-# The pandas path above round-trips the whole html/text payload through
-# Arrow->Python->Arrow; measured at ~39 s for 80k pages on local[32],
-# the transfer alone dominates the (~2 s) parsing work. The expression
-# path below keeps everything inside whole-stage codegen: substring to
-# recover text from html (byte-identical), split to lines, split fields
-# with a limit (pipes inside the trailing JSON survive), from_json for
-# the tag/info maps.
+# Everything stays inside whole-stage codegen: substring to recover text
+# from html (byte-identical), split to lines, split fields with a limit
+# (pipes inside the trailing JSON survive), from_json for the tag/info
+# maps. A pandas/Arrow extractor that round-tripped the payload through
+# Python measured ~39 s for 80k pages on local[32], the transfer alone
+# dominating the ~2 s of parsing; it survives only as the test oracle
+# (tests/extract_oracle.py).
 #
-# One documented limitation of the SQL path: way/relation lines carry
-# TWO trailing JSON objects ('tags|info'), split on the first literal
-# '}|{' boundary — a tag VALUE containing that exact 3-byte sequence
-# would mis-split (node lines are immune: single trailing JSON). The
-# pandas path has no such limit; tests assert both paths agree on the
-# reference fixture (real OSM tags with unicode/quotes).
+# One documented limitation: way/relation lines carry TWO trailing JSON
+# objects ('tags|info'), split on the first literal '}|{' boundary — a
+# tag VALUE containing that exact 3-byte sequence would mis-split (node
+# lines are immune: single trailing JSON). The oracle has no such limit;
+# tests assert both agree on the reference fixture (real OSM tags with
+# unicode/quotes) and on synthetic pages.
 
 
-def _recovered_text(from_html: bool):
-    if not from_html:
-        return F.col("text")
+def _recovered_text():
     return F.expr(
         f"substring(decode(html, 'UTF-8'), {len(PAGE_PREFIX) + 1}, "
         f"length(decode(html, 'UTF-8')) - {len(PAGE_PREFIX) + len(PAGE_SUFFIX)})"
     )
 
 
-def _lines(
-    pages: DataFrame, from_html: bool, prefix: str, line_filter=None
-) -> DataFrame:
+def _lines(pages: DataFrame, prefix: str, line_filter=None) -> DataFrame:
     # Sound page-level prefilter (round 6): a page with ANY matching
-    # line necessarily contains the prefix bytes in its raw payload, so
+    # line necessarily contains the prefix bytes in its raw html, so
     # non-matching pages are dropped BEFORE the decode+split+explode
-    # (checked on the binary html / raw text column — no decode). Each
-    # entity kind's scan now pays full line-splitting only for its own
-    # pages instead of the whole corpus; may only over-select (the
-    # exact per-line startswith below is unchanged).
-    if from_html:
-        pages = pages.filter(F.contains("html", F.lit(prefix.encode("utf-8"))))
-    else:
-        pages = pages.filter(F.contains("text", F.lit(prefix)))
+    # (checked on the binary column — no decode). Each entity kind's
+    # scan pays full line-splitting only for its own pages instead of
+    # the whole corpus; may only over-select (the exact per-line
+    # startswith below is unchanged).
+    pages = pages.filter(F.contains("html", F.lit(prefix.encode("utf-8"))))
     df = pages.select(
-        F.explode(F.split(_recovered_text(from_html), "\n")).alias("line")
+        F.explode(F.split(_recovered_text(), "\n")).alias("line")
     ).filter(F.col("line").startswith(prefix))
     if line_filter is not None:
         # sound string prefilter (tagfilter.line_prefilter): drops lines
@@ -287,10 +191,8 @@ def _json_pair(rest):
     return tags, info
 
 
-def extract_nodes_sql(
-    pages: DataFrame, from_html: bool = True, line_filter=None
-) -> DataFrame:
-    lines = _lines(pages, from_html, "OSMNODE|", line_filter)
+def extract_nodes_sql(pages: DataFrame, line_filter=None) -> DataFrame:
+    lines = _lines(pages, "OSMNODE|", line_filter)
     p = F.split("line", r"\|", 5)  # limit: tags JSON may contain pipes
     return lines.select(
         F.get(p, 1).cast("bigint").alias("id"),
@@ -300,10 +202,8 @@ def extract_nodes_sql(
     )
 
 
-def extract_ways_sql(
-    pages: DataFrame, from_html: bool = True, line_filter=None
-) -> DataFrame:
-    lines = _lines(pages, from_html, "OSMWAY|", line_filter)
+def extract_ways_sql(pages: DataFrame, line_filter=None) -> DataFrame:
+    lines = _lines(pages, "OSMWAY|", line_filter)
     p = F.split("line", r"\|", 4)
     tags, info = _json_pair(F.get(p, 3))
     return lines.select(
@@ -314,10 +214,8 @@ def extract_ways_sql(
     )
 
 
-def extract_relations_sql(
-    pages: DataFrame, from_html: bool = True, line_filter=None
-) -> DataFrame:
-    lines = _lines(pages, from_html, "OSMREL|", line_filter)
+def extract_relations_sql(pages: DataFrame, line_filter=None) -> DataFrame:
+    lines = _lines(pages, "OSMREL|", line_filter)
     p = F.split("line", r"\|", 5)
     tags, info = _json_pair(F.get(p, 4))
     return lines.select(
@@ -329,22 +227,10 @@ def extract_relations_sql(
     )
 
 
-def extract_all(pages: DataFrame, from_html: bool = True, engine: str = "sql"):
-    """One call -> (nodes, ways, relations).
-
-    engine='sql' (default): pure Catalyst expressions, whole-stage
-    codegen, no Python — the scale path. engine='pandas': the Arrow
-    UDF path (robust to '}|{' inside tag values; used for parity
-    testing and as the escape hatch).
-    """
-    if engine == "sql":
-        return (
-            extract_nodes_sql(pages, from_html),
-            extract_ways_sql(pages, from_html),
-            extract_relations_sql(pages, from_html),
-        )
+def extract_all(pages: DataFrame):
+    """One call -> (nodes, ways, relations)."""
     return (
-        extract_nodes(pages, from_html),
-        extract_ways(pages, from_html),
-        extract_relations(pages, from_html),
+        extract_nodes_sql(pages),
+        extract_ways_sql(pages),
+        extract_relations_sql(pages),
     )

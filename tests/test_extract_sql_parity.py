@@ -1,10 +1,11 @@
 """SQL (pure Catalyst) extraction must agree with the pandas/Arrow
-extraction on the reference fixture — real OSM tags with unicode,
-quotes, commas — and on synthetic pages."""
+extraction oracle (tests/extract_oracle.py) on the reference fixture —
+real OSM tags with unicode, quotes, commas — and on synthetic pages."""
 
 import pytest
 
 from osmptparser_spark.sources import pages as P
+from tests import extract_oracle as O
 from tests.fixture_util import load_entities
 
 
@@ -20,16 +21,24 @@ def _rows(df, key="id"):
     return sorted((r.asDict(recursive=True) for r in df.collect()), key=lambda d: d[key])
 
 
-@pytest.mark.parametrize("from_html", [True, False])
-def test_sql_equals_pandas_on_fixture(fixture_pages, from_html):
+@pytest.fixture(scope="module")
+def synthetic_pages(spark):
+    from osmptparser_spark.sources.synth import synth_pages_spark
+
+    return synth_pages_spark(spark, n_routes=40, routes_per_task=20).cache()
+
+
+@pytest.mark.parametrize("corpus", ["fixture_pages", "synthetic_pages"])
+def test_sql_equals_pandas(request, corpus):
+    pages = request.getfixturevalue(corpus)
     for sql_fn, pd_fn in [
-        (P.extract_nodes_sql, P.extract_nodes),
-        (P.extract_ways_sql, P.extract_ways),
-        (P.extract_relations_sql, P.extract_relations),
+        (P.extract_nodes_sql, O.extract_nodes),
+        (P.extract_ways_sql, O.extract_ways),
+        (P.extract_relations_sql, O.extract_relations),
     ]:
-        got = _rows(sql_fn(fixture_pages, from_html))
-        want = _rows(pd_fn(fixture_pages, from_html))
-        assert got == want, sql_fn.__name__
+        got = _rows(sql_fn(pages))
+        want = _rows(pd_fn(pages))
+        assert got and got == want, sql_fn.__name__
 
 
 def test_sql_handles_pipes_inside_node_tags(spark):
@@ -38,7 +47,7 @@ def test_sql_handles_pipes_inside_node_tags(spark):
     pages = P.pages_df(spark, P.entities_to_pages(nodes, [], []))
     row = P.extract_nodes_sql(pages).collect()[0]
     assert dict(row.tags) == {"name": "a|b|c", "k": "v"}
-    row2 = P.extract_nodes(pages).collect()[0]
+    row2 = O.extract_nodes(pages).collect()[0]
     assert dict(row2.tags) == dict(row.tags)
 
 
@@ -46,7 +55,7 @@ def test_pandas_path_handles_pipes_in_way_tags(spark):
     # the documented SQL-path limitation: '}|{'-free pipes still fine
     ways = [{"id": 7, "tags": {"note": "x|y"}, "info": {"k": "1"}, "refs": [1, 2]}]
     pages = P.pages_df(spark, P.entities_to_pages([], ways, []))
-    for fn in (P.extract_ways, P.extract_ways_sql):
+    for fn in (O.extract_ways, P.extract_ways_sql):
         row = fn(pages).collect()[0]
         assert dict(row.tags) == {"note": "x|y"}
         assert dict(row.info) == {"k": "1"}

@@ -203,14 +203,9 @@ class TestDedupRound2:
 
 
 def test_single_way_partitioned_stitch_parity(spark):
-    from osmptparser_spark.operators.hydrate import (
-        hydrate_single_ways,
-        single_way_node_rows,
-    )
-    from osmptparser_spark.operators.stitch import (
-        stitch,
-        stitch_node_rows_partitioned,
-    )
+    from osmptparser_spark.operators import stitch_core as sc
+    from osmptparser_spark.operators.hydrate import single_way_node_rows
+    from osmptparser_spark.operators.stitch import stitch_node_rows_partitioned
 
     s = 2e-4
     nodes = [
@@ -231,13 +226,16 @@ def test_single_way_partitioned_stitch_parity(spark):
         [(w, {}, {}, refs) for w, refs in ways],
         "id BIGINT, tags MAP<STRING,STRING>, info MAP<STRING,STRING>, refs ARRAY<BIGINT>",
     )
-    old = stitch(hydrate_single_ways(ways_df, nodes_df), 150.0, closed=True)
-    new = stitch_node_rows_partitioned(
+    got = stitch_node_rows_partitioned(
         single_way_node_rows(ways_df, nodes_df), 150.0, closed=True
     )
-    o = {r.rel_id: (r.status_code, r.status_detail, r.node_seq) for r in old.collect()}
-    n = {r.rel_id: (r.status_code, r.status_detail, r.node_seq) for r in new.collect()}
-    assert o == n
+    n = {r.rel_id: (r.status_code, r.status_detail, r.node_seq) for r in got.collect()}
+    by_id = {i: (i, la, lo) for i, la, lo in nodes}
+    want = {}
+    for w, refs in ways:
+        geom, (code, detail) = sc.flatten([[by_id[r] for r in refs]], 150.0, True)
+        want[w] = (code, detail, [[p[0] for p in seg] for seg in geom])
+    assert n == want
     assert n[101][0] == 0 and n[102][0] == 102 and n[103][0] == 501
 
 

@@ -5,7 +5,8 @@ bit/row-identical to their reference formulations.
   formulation it replaced;
 * ``minhash_lsh_pairs`` broadcast-verify path vs the shuffle-verify
   fallback (verify_broadcast_max_docs=0 forces the old plan);
-* ``_stitch_many`` column-accumulator rework vs per-group stitching;
+* ``_stitch_many`` column-accumulator rework vs per-relation
+  ``stitch_core.flatten`` (the scalar reference);
 * extraction ``{}`` fast path on a mixed empty/non-empty tag corpus.
 """
 
@@ -73,11 +74,9 @@ def test_minhash_broadcast_and_shuffle_verify_agree(spark):
     assert got == want and len(got) > 0
 
 
-def test_stitch_many_matches_per_group(spark):
-    from osmptparser_spark.operators.stitch import (
-        _stitch_many,
-        _stitch_node_rows_group,
-    )
+def test_stitch_many_matches_per_group():
+    from osmptparser_spark.operators import stitch_core as sc
+    from osmptparser_spark.operators.stitch import _stitch_many
 
     rng = np.random.default_rng(3)
     rows = []
@@ -96,25 +95,36 @@ def test_stitch_many_matches_per_group(spark):
                 )
     pdf = pd.DataFrame(rows).sample(frac=1.0, random_state=5)  # scramble
     got = _stitch_many(pdf, 150.0, False).sort_values("rel_id")
-    want = pd.concat(
-        [
-            _stitch_node_rows_group(g, 150.0, False)
-            for _, g in pdf.groupby("rel_id", sort=True)
-        ],
-        ignore_index=True,
-    ).sort_values("rel_id")
-    assert list(got["rel_id"]) == list(want["rel_id"])
-    for col in ["geometry", "node_seq", "status_code", "status_detail"]:
-        assert list(got[col]) == list(want[col]), col
+
+    ordered = pdf.iloc[np.lexsort((pdf["node_pos"], pdf["way_pos"], pdf["rel_id"]))]
+    want = []
+    for rel, g in ordered.groupby("rel_id", sort=True):
+        ways = [
+            list(zip(w["node_id"], w["lat"], w["lon"]))
+            for _, w in g.groupby("way_pos", sort=True)
+        ]
+        geom, (code, detail) = sc.flatten(ways, 150.0, False)
+        want.append(
+            (
+                rel,
+                [[{"lon": n[2], "lat": n[1]} for n in seg] for seg in geom],
+                [[n[0] for n in seg] for seg in geom],
+                code,
+                detail,
+            )
+        )
+    assert list(got["rel_id"]) == [w[0] for w in want]
+    for i, col in enumerate(["geometry", "node_seq", "status_code", "status_detail"], 1):
+        assert list(got[col]) == [w[i] for w in want], col
 
 
 def test_extraction_empty_map_fast_path(spark):
     from osmptparser_spark.sources.pages import (
         entities_to_pages,
-        extract_nodes,
         extract_nodes_sql,
         pages_df,
     )
+    from tests.extract_oracle import extract_nodes
 
     nodes = [
         {"id": 1, "lat": 1.0, "lon": 2.0, "tags": {}},

@@ -132,7 +132,7 @@ class TestCacheBarrierContract:
         return synth_pages_spark(spark, n_routes=n_routes, routes_per_task=10)
 
     def test_cache_barrier_contract(self, spark):
-        """The load-bearing cache (engine._barrier 'cache') must hold
+        """The load-bearing cache (engine._pages_entities) must hold
         the PREFILTERED relation table only — O(matched relations),
         never O(pages). Assert the measured storage size via the RDD
         storage registry after materialization."""
@@ -155,23 +155,69 @@ class TestCacheBarrierContract:
         assert total_mb < 8.0, f"cached {total_mb:.1f} MB: barrier holds more than relations"
         spark.catalog.clearCache()
 
-    def test_local_checkpoint_barrier_same_result(self, spark):
-        from osmptparser_spark.engine import routes_from_pages
+    @staticmethod
+    def _by_id(df):
+        return sorted(
+            (r.asDict(recursive=True) for r in df.collect()),
+            key=lambda d: (d["id"], d.get("id_type", "")),
+        )
+
+    def test_routes_from_pages_matches_get_public_transports(self, spark):
+        """The pages entry (prefilter + cache) must give exactly what the
+        entity entry gives on the plainly extracted tables."""
+        from osmptparser_spark.engine import get_public_transports, routes_from_pages
         from osmptparser_spark.functions.tagfilter import PTV2_FILTER
+        from osmptparser_spark.sources.pages import extract_all
 
         pages = self._pages(spark)
-        a = routes_from_pages(pages, 150.0, PTV2_FILTER, barrier="cache")
-        b = routes_from_pages(pages, 150.0, PTV2_FILTER, barrier="localCheckpoint")
-        ka = sorted((r.id, r.status_code) for r in a.select("id", "status_code").collect())
-        kb = sorted((r.id, r.status_code) for r in b.select("id", "status_code").collect())
-        assert ka == kb and len(ka) > 0
+        for conditions in (PTV2_FILTER, None):
+            got = self._by_id(routes_from_pages(pages, 150.0, conditions))
+            want = self._by_id(
+                get_public_transports(*extract_all(pages), 150.0, conditions)
+            )
+            assert got == want and len(got) > 0
         spark.catalog.clearCache()
 
-    def test_unknown_barrier_rejected(self, spark):
-        from osmptparser_spark.engine import routes_from_pages
+    def test_areas_from_pages_matches_get_areas(self, spark):
+        """Same for area mode: covers the soundness of the way-line
+        prefilter that only areas_from_pages applies."""
+        import __spark_entry__ as entry_mod
+        from osmptparser_spark.engine import areas_from_pages, get_areas
+        from osmptparser_spark.sources.pages import entities_to_pages, extract_all, pages_df
 
-        with pytest.raises(ValueError, match="barrier"):
-            routes_from_pages(self._pages(spark), 150.0, None, barrier="bogus")
+        nodes, ways, rels = entry_mod._area_city_entities()
+        pages = pages_df(spark, entities_to_pages(nodes, ways, rels, 10))
+        cond = "name&landuse=park"
+        got = self._by_id(areas_from_pages(pages, 150.0, cond))
+        want = self._by_id(get_areas(*extract_all(pages), 150.0, cond))
+        assert got == want
+        assert {d["id_type"] for d in got} == {"r", "w"}
+        spark.catalog.clearCache()
+
+    def test_cli_pages_input_uses_cache_barrier(self, spark, tmp_path):
+        """``--input-format pages`` goes through the pages entry, so the
+        prefiltered relation cache is built and stays within the
+        test_cache_barrier_contract bound."""
+        import os
+
+        from osmptparser_spark import cli
+
+        spark.catalog.clearCache()
+        inp = str(tmp_path / "pages.parquet")
+        outp = str(tmp_path / "out")
+        self._pages(spark).write.parquet(inp)
+        assert cli.main(["--filter-ptv2", "--input", inp, "--output", outp]) == 0
+        assert any(
+            os.path.getsize(os.path.join(outp, f))
+            for f in os.listdir(outp)
+            if f.startswith("part-")
+        )
+        infos = spark._jsc.sc().getRDDStorageInfo()
+        cached = [i for i in infos if i.numCachedPartitions() > 0]
+        assert cached, "CLI pages run built no relation cache"
+        total_mb = sum(i.memSize() + i.diskSize() for i in cached) / 1e6
+        assert total_mb < 8.0, f"cached {total_mb:.1f} MB: barrier holds more than relations"
+        spark.catalog.clearCache()
 
 
 class TestParMap:

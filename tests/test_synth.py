@@ -41,9 +41,9 @@ def test_spark_generator_blocks_disjoint_and_deterministic(spark):
     rows = df.collect()
     urls = [r.url for r in rows]
     assert len(urls) == len(set(urls))
-    from osmptparser_spark.sources.pages import extract_relations
+    from osmptparser_spark.sources.pages import extract_relations_sql
 
-    rels = extract_relations(df)
+    rels = extract_relations_sql(df)
     assert rels.count() == 120
     assert rels.select("id").distinct().count() == 120
     again = synth_pages_spark(spark, n_routes=120, routes_per_task=50).collect()

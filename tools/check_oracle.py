@@ -16,23 +16,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
-
-
-def _norm(v):
-    if isinstance(v, float):
-        return round(v, 9)
-    return v
-
-
-def _rows(rows):
-    return sorted(
-        (tuple(_norm(v) for v in r) for r in rows),
-        key=lambda t: tuple((v is not None, str(type(v)), v) for v in t),
-    )
+from tests.test_entry_oracle import TABLES, _rows  # noqa: E402
 
 
 def main() -> int:
