@@ -62,6 +62,27 @@ BENCH_QUERIES = [
 ]
 
 
+#: summary keys an over-long summary line sheds first, least needed
+#: first; ``queries`` (the per-query seconds) is never among them
+_SHED_FIRST = (
+    "dirty_legs", "geo_capacity_clean", "geo_steal_sec", "geo_cpu_sec",
+    "cpus", "routes",
+)
+
+
+def _shed_keys(summary: dict, limit: int = 1900) -> str:
+    """JSON line of ``summary`` without as few ``_SHED_FIRST`` keys as it
+    takes to fit ``limit`` chars (it may still not fit)."""
+    summary = dict(summary)
+    line = json.dumps(summary)
+    for key in _SHED_FIRST:
+        if len(line) <= limit:
+            break
+        summary.pop(key, None)
+        line = json.dumps(summary)
+    return line
+
+
 def _ensure_pages(spark):
     if not os.path.exists(os.path.join(PAGES_CACHE, "_SUCCESS")):
         from osmptparser_spark.sources.synth import synth_pages_spark
@@ -433,6 +454,8 @@ def main():
         "detail": os.path.basename(detail_path),
     }
     line = json.dumps(summary)
+    if len(line) > 1900:  # shed diagnostics first, keeping the queries dict
+        line = _shed_keys(summary)
     if len(line) > 1900:  # hard driver-tail guard: drop to bare headline
         line = json.dumps({
             "metric": detail["metric"], "value": detail["value"],

@@ -1,14 +1,19 @@
-"""Semi-joins (J1/J2) and order-preserving relation hydration (J3).
+"""Semi-join (J1), node filtering (J2) and order-preserving relation
+hydration (J3).
 
 The reference builds global id-sets behind RwLocks across three file
 passes (mod.rs:178-179) and probes hash maps per ref (mod.rs:664-702).
 Spark-first equivalents:
 
-* J1/J2 are LEFT SEMI joins on exploded member-id sets. Catalyst picks
-  broadcast-hash when the distinct id set is small and falls back to
-  shuffle semi-join (+ runtime Bloom filter pushdown) at scale — the
+* J1 is a LEFT SEMI join on the exploded way-member id set. Catalyst
+  picks broadcast-hash when the distinct id set is small and falls back
+  to shuffle semi-join (+ runtime Bloom filter pushdown) at scale — the
   same cascaded filter effect as the reference's 3-pass scan, without
   re-reading the source.
+* J2 needs no id set of its own: the INNER node joins of the hydration
+  below (way-node refs in ``hydrated_node_rows`` /
+  ``single_way_node_rows``, stop refs in ``hydrate_stops``) keep exactly
+  the referenced nodes.
 * J3 (hydration) preserves member order without per-row Python:
   ``posexplode`` keeps the ordinals and inner joins drop dangling refs
   (mod.rs:672,680 semantics). The flat (rel_id, way_pos, node_pos, id,
@@ -31,20 +36,6 @@ def relation_way_ids(relations: DataFrame) -> DataFrame:
 def semi_join_ways(ways: DataFrame, relations: DataFrame) -> DataFrame:
     """J1: keep only ways that are members of a surviving relation."""
     return ways.join(relation_way_ids(relations), "id", "left_semi")
-
-
-def referenced_node_ids(relations: DataFrame, rel_ways: DataFrame) -> DataFrame:
-    """J2 build side: stop-node ids union way-node ids, distinct."""
-    stop_ids = relations.select(F.explode("stop_refs").alias("id"))
-    way_node_ids = rel_ways.select(F.explode("refs").alias("id"))
-    return stop_ids.unionByName(way_node_ids).distinct()
-
-
-def semi_join_nodes(
-    nodes: DataFrame, relations: DataFrame, rel_ways: DataFrame
-) -> DataFrame:
-    """J2: keep only nodes referenced by surviving relations/ways."""
-    return nodes.join(referenced_node_ids(relations, rel_ways), "id", "left_semi")
 
 
 def hydrated_node_rows(

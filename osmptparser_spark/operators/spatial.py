@@ -3,10 +3,9 @@ salting, within-distance joins, kNN, point-in-polygon, raster<->vector.
 
 Strategy at 100 TB: every spatial predicate is reduced to an equi-join
 on H3X cell ids (candidate generation), then refined with an exact
-JVM-side haversine / a vectorized ray-cast. Small build sides are
-broadcast; skewed cells (megacities) are salted so one cell's pairs
-spread over N reducers; AQE skew-join splitting backs this up for
-moderate skew.
+JVM-side haversine / a vectorized ray-cast. Each join has one plan;
+skewed cells (megacities) are salted so one cell's pairs spread over N
+reducers; AQE skew-join splitting backs this up for moderate skew.
 """
 
 from __future__ import annotations
@@ -24,6 +23,7 @@ from ..functions.tiling import (
     face_edge_m_udf,
     h3_encode_udf,
     k_ring_udf,
+    polygon_cover_cells_batch,
 )
 
 
@@ -41,28 +41,6 @@ def _with_cell(df: DataFrame, res: int, lat: str, lon: str, out: str) -> DataFra
     )
 
 
-def cell_join(
-    left: DataFrame,
-    right: DataFrame,
-    res: int = 9,
-    left_cols=("lat", "lon"),
-    right_cols=("lat", "lon"),
-    broadcast_right: bool = True,
-) -> DataFrame:
-    """W5 core: co-bucket both sides at ``res`` and equi-join on cell.
-
-    Candidates only — callers refine with an exact predicate. With
-    ``broadcast_right`` the build side ships to every executor (no
-    shuffle at all); otherwise a plain shuffle hash join with AQE skew
-    splitting.
-    """
-    l = _with_cell(left, res, *left_cols, out="_cell")
-    r = _with_cell(right, res, *right_cols, out="_cell")
-    if broadcast_right:
-        r = F.broadcast(r)
-    return l.join(r, "_cell")
-
-
 def salted_cell_join(
     left: DataFrame,
     right: DataFrame,
@@ -71,7 +49,10 @@ def salted_cell_join(
     left_cols=("lat", "lon"),
     right_cols=("lat", "lon"),
 ) -> DataFrame:
-    """Skew-proof variant: replicate the RIGHT side ``salt`` times with
+    """W5: co-bucket both sides at ``res`` and equi-join on (cell, salt).
+    Candidates only — callers refine with an exact predicate.
+
+    Skew-proof: replicate the RIGHT side ``salt`` times with
     salt ids 0..salt-1 and give each LEFT row one deterministic salt, so
     a megacity cell's candidate pairs spread over ``salt`` reducers.
     Exactly one (cell, salt) match per true pair -> no duplicates."""
@@ -91,14 +72,13 @@ def within_distance_join(
     stops: DataFrame,
     radius_m: float,
     res: int = 9,
-    ring: int | None = None,
     point_id: str = "id",
     stop_id: str = "id",
 ) -> DataFrame:
     """All (point, stop) pairs within ``radius_m``: covering-cell
     candidate explode on the point side, equi-join on cell, exact
-    haversine refine (JVM-side). ``ring`` defaults to the
-    guaranteed-coverage ``h3x.ring_for_radius(radius_m, res)``.
+    haversine refine (JVM-side). The ring is the guaranteed-coverage
+    ``h3x.ring_for_radius(radius_m, res)``.
 
     Coverage holds across icosahedron face boundaries: the point side
     uses ``covering_cells_udf`` (multi-face encode + ring), so a stop
@@ -107,8 +87,7 @@ def within_distance_join(
     missed those pairs."""
     from ..functions.h3x import ring_for_radius
 
-    if ring is None:
-        ring = ring_for_radius(radius_m, res)
+    ring = ring_for_radius(radius_m, res)
     p = (
         points.withColumn(
             "_cells", covering_cells_udf(res, radius_m, ring)(F.col("lat"), F.col("lon"))
@@ -155,8 +134,8 @@ def knn_join(
     Scale path: k-ring candidate generation -> cell equi-join -> exact
     haversine -> row_number window top-k. Queries whose result is not
     provably complete escalate through progressively wider CELL joins
-    (never all-pairs): (2) a 2x ring at res-1, (3) a face-safe
-    multiface covering sweep at res-2 over a ~4x radius. Only the
+    (never all-pairs): (2) a 2x ring at res-1, (3) ``within_distance_join``
+    at res-2 over a ~4x radius (face-safe multiface cover). Only the
     remainder of THAT — queries with fewer than k candidates inside a
     multi-hundred-km disk, structurally rare at any density — hits the
     brute-force pass, and the brute pass broadcasts the PENDING QUERY
@@ -206,7 +185,8 @@ def knn_join(
     # could live on the adjacent face unseen — the round-1 check was
     # intra-face-only). Everything else escalates: first a 2x ring at
     # the coarser res (still a cell join — at web scale sparse regions
-    # and face-edge queries are rare), then brute force.
+    # and face-edge queries are rare), then the covering sweep, then
+    # brute force.
     from ..functions.h3x import ring_guaranteed_m
 
     q_edge = queries.select(
@@ -243,42 +223,29 @@ def knn_join(
     done2 = _complete(wide, ring_guaranteed_m(ring * 2, max(res - 1, 0)))
     pending2 = pending1.join(done2, "query_id", "left_anti")
 
-    # Third escalation: face-safe multiface covering sweep — still a
-    # cell EQUI-join, at a coarser res over a ~4x radius. Because the
-    # cover crosses icosahedron faces (unlike k-rings), completeness
+    # Third escalation: face-safe multiface covering sweep — the
+    # within-distance join at a coarser res over a ~4x radius. Because
+    # the cover crosses icosahedron faces (unlike k-rings), completeness
     # needs NO face-edge cap: every candidate within r3 provably
-    # appears, so found >= k with kth dist <= r3 is exact.
-    res3 = max(res - 2, 0)
+    # appears, so >= k of them means the top k are the exact top k.
     r3 = 4.0 * ring_guaranteed_m(ring * 2, max(res - 1, 0))
-    from ..functions.h3x import ring_for_radius
-
-    ring3 = ring_for_radius(r3, res3)
-    q3 = pending2.withColumn(
-        "_cells", covering_cells_udf(res3, r3, ring3)(F.col("lat"), F.col("lon"))
-    ).select(
-        "query_id",
-        F.col("lat").alias("q_lat"),
-        F.col("lon").alias("q_lon"),
-        F.explode("_cells").alias("_cell"),
-    )
-    c3 = _with_cell(candidates, res3, "lat", "lon", "_cell").select(
-        F.col(cand_id).alias("cand_id"),
-        F.col("lat").alias("c_lat"),
-        F.col("lon").alias("c_lon"),
-        "_cell",
-    )
     topk3 = (
-        q3.join(c3, "_cell")
-        .dropDuplicates(["query_id", "cand_id"])
-        .withColumn("dist_m", dist)
+        within_distance_join(
+            pending2, candidates, r3, max(res - 2, 0),
+            point_id="query_id", stop_id=cand_id,
+        )
+        .select(
+            F.col("point_id").alias("query_id"),
+            F.col("stop_id").alias("cand_id"),
+            "dist_m",
+        )
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "dist_m", "rank")
     )
     done3 = (
         topk3.groupBy("query_id")
-        .agg(F.count("*").alias("_n"), F.max("dist_m").alias("_d"))
-        .filter((F.col("_n") >= k) & (F.col("_d") <= F.lit(r3)))
+        .agg(F.count("*").alias("_n"))
+        .filter(F.col("_n") >= k)
         .select("query_id")
     )
     short = (
@@ -386,56 +353,40 @@ def _ray_cast(px, py, ring_x, ring_y):
     return inside
 
 
+#: (poly, salt) refine groups per polygon (see point_in_polygon_join).
+PIP_SALT = 16
+
+
 def point_in_polygon_join(
     points: DataFrame,
     polygons: DataFrame,
     res: int = 7,
     point_id: str = "id",
     poly_id: str = "poly_id",
-    salt: int = 16,
-    strategy: str = "cells",
-    max_cover_cells: int = 200_000,
 ) -> DataFrame:
     """W6: (point, polygon) containment pairs.
 
     ``polygons``: poly_id BIGINT, ring ARRAY<STRUCT<lon,lat>> (closed).
 
-    Candidate strategies (both refine with the same salted numpy
-    ray-cast; the result set is identical):
+    Candidates (the 100-TB-safe plan): each polygon emits a
+    provably-covering set of H3X cells at ``res``
+    (``polygon_cover_cells``), exploded into (cell, poly) rows; the
+    point side computes one home cell per point and the candidate stage
+    is a plain shuffle hash EQUI-join on cell with the bbox kept as a
+    cheap residual predicate. No broadcast of either side, no
+    nested-loop — both tables can be arbitrarily large, work scales
+    with true spatial overlap.
 
-    * ``"cells"`` (default, the 100-TB-safe plan): each polygon emits a
-      provably-covering set of H3X cells at ``res``
-      (``polygon_cover_cells``), exploded into (cell, poly) rows; the
-      point side computes one home cell per point and the candidate
-      stage is a plain shuffle hash EQUI-join on cell with the bbox
-      kept as a cheap residual predicate. No broadcast of either side,
-      no nested-loop — both tables can be arbitrarily large, work
-      scales with true spatial overlap.
-    * ``"broadcast"``: polygon bounding boxes broadcast and range-
-      joined on lat/lon. Fewer jobs and no per-polygon cover cost —
-      the right optimizer choice when ``polygons`` is a dim table
-      (admin areas), and the plan Catalyst cannot pick by itself
-      because the predicate is a range, not an equality.
-
-    Refine: numpy ray casting over (poly, salt) COGROUPS (round-5
-    rework): the candidate side shuffles bare (point, poly, salt) rows
-    — never the ring — and each group receives its ring exactly once
-    from a tiny (n_polys x salt)-row side that carries the only ring
-    bytes in the whole refine. The previous design attached the ring to
-    every candidate row (ring bytes x candidates through the refine
-    shuffle, plus an AQE broadcast re-attach join and a second Python-
-    visible polygon pass per action — the w6 bench leg's stage-latency
-    floor). The ray cast is per-point, so salting is result-neutral —
-    without it a country-sized polygon with 10^9 candidate points is
-    ONE straggler task holding one pandas frame; with it the hot
-    polygon spreads over ``salt`` tasks.
+    Refine: numpy ray casting over (poly, salt) COGROUPS: the candidate
+    side shuffles bare (point, poly, salt) rows — never the ring — and
+    each group receives its ring exactly once from a tiny
+    (n_polys x salt)-row side that carries the only ring bytes in the
+    whole refine, so ring bytes never scale with the candidate count.
+    The ray cast is per-point, so salting is result-neutral — without
+    it a country-sized polygon with 10^9 candidate points is ONE
+    straggler task holding one pandas frame; with it the hot polygon
+    spreads over ``PIP_SALT`` tasks.
     """
-    bbox_cols = [
-        F.array_min(F.transform("ring", lambda p: p["lat"])).alias("_lat_min"),
-        F.array_max(F.transform("ring", lambda p: p["lat"])).alias("_lat_max"),
-        F.array_min(F.transform("ring", lambda p: p["lon"])).alias("_lon_min"),
-        F.array_max(F.transform("ring", lambda p: p["lon"])).alias("_lon_max"),
-    ]
     pts = points.select(
         F.col(point_id).alias("point_id"),
         F.col("lat").alias("p_lat"),
@@ -447,71 +398,58 @@ def point_in_polygon_join(
         & (F.col("p_lon") >= F.col("_lon_min"))
         & (F.col("p_lon") <= F.col("_lon_max"))
     )
-    if strategy == "broadcast":
-        polys = polygons.select(poly_id, "ring", *bbox_cols)
-        cands = pts.join(F.broadcast(polys), in_bbox).select(
-            "point_id", "p_lat", "p_lon", poly_id
-        )
-    elif strategy == "cells":
-        from ..functions.tiling import polygon_cover_cells_batch
+    cover_ddl = (
+        f"{poly_id} BIGINT, _cell BIGINT, _lat_min DOUBLE, "
+        "_lat_max DOUBLE, _lon_min DOUBLE, _lon_max DOUBLE"
+    )
 
-        cover_ddl = (
-            f"{poly_id} BIGINT, _cell BIGINT, _lat_min DOUBLE, "
-            "_lat_max DOUBLE, _lon_min DOUBLE, _lon_max DOUBLE"
+    def gen_cover(batches):
+        empty = pd.DataFrame(
+            columns=[
+                poly_id, "_cell", "_lat_min", "_lat_max",
+                "_lon_min", "_lon_max",
+            ]
         )
-
-        def gen_cover(batches):
-            empty = pd.DataFrame(
-                columns=[
-                    poly_id, "_cell", "_lat_min", "_lat_max",
-                    "_lon_min", "_lon_max",
-                ]
+        for pdf in batches:
+            if len(pdf) == 0:
+                yield empty
+                continue
+            rings = []
+            bbox = np.empty((len(pdf), 4))
+            for n, ring in enumerate(pdf["ring"]):
+                ry = np.array([p["lat"] for p in ring])
+                rx = np.array([p["lon"] for p in ring])
+                rings.append((ry, rx))
+                bbox[n] = (ry.min(), ry.max(), rx.min(), rx.max())
+            owner, cells = polygon_cover_cells_batch(rings, res)
+            pids = pdf[poly_id].to_numpy()
+            yield pd.DataFrame(
+                {
+                    poly_id: pids[owner],
+                    "_cell": cells.astype("int64"),
+                    "_lat_min": bbox[owner, 0],
+                    "_lat_max": bbox[owner, 1],
+                    "_lon_min": bbox[owner, 2],
+                    "_lon_max": bbox[owner, 3],
+                }
             )
-            for pdf in batches:
-                if len(pdf) == 0:
-                    yield empty
-                    continue
-                rings = []
-                bbox = np.empty((len(pdf), 4))
-                for n, ring in enumerate(pdf["ring"]):
-                    ry = np.array([p["lat"] for p in ring])
-                    rx = np.array([p["lon"] for p in ring])
-                    rings.append((ry, rx))
-                    bbox[n] = (ry.min(), ry.max(), rx.min(), rx.max())
-                owner, cells = polygon_cover_cells_batch(
-                    rings, res, max_cover_cells
-                )
-                pids = pdf[poly_id].to_numpy()
-                yield pd.DataFrame(
-                    {
-                        poly_id: pids[owner],
-                        "_cell": cells.astype("int64"),
-                        "_lat_min": bbox[owner, 0],
-                        "_lat_max": bbox[owner, 1],
-                        "_lon_min": bbox[owner, 2],
-                        "_lon_max": bbox[owner, 3],
-                    }
-                )
 
-        cover = polygons.select(poly_id, "ring").mapInPandas(gen_cover, cover_ddl)
-        # shuffle_hash hint (round 6): Catalyst's size estimate for the
-        # opaque point-side encode is tiny, so it BROADCAST the POINT
-        # side (measured in the w6 bench plan: BuildLeft over 10^6
-        # points) — exactly the unbounded-side broadcast this strategy
-        # documents away. The hint pins the documented shape: both
-        # sides shuffled by cell, the bounded cover side built per
-        # partition.
-        cands = (
-            _with_cell(pts, res, "p_lat", "p_lon", "_cell")
-            .join(cover.hint("shuffle_hash"), "_cell")
-            .filter(in_bbox)
-            .select("point_id", "p_lat", "p_lon", poly_id)
-        )
-    else:
-        raise ValueError(f"unknown strategy {strategy!r}")
-
+    cover = polygons.select(poly_id, "ring").mapInPandas(gen_cover, cover_ddl)
+    # shuffle_hash hint (round 6): Catalyst's size estimate for the
+    # opaque point-side encode is tiny, so it BROADCAST the POINT
+    # side (measured in the w6 bench plan: BuildLeft over 10^6
+    # points) — exactly the unbounded-side broadcast this plan
+    # documents away. The hint pins the documented shape: both
+    # sides shuffled by cell, the bounded cover side built per
+    # partition.
+    cands = (
+        _with_cell(pts, res, "p_lat", "p_lon", "_cell")
+        .join(cover.hint("shuffle_hash"), "_cell")
+        .filter(in_bbox)
+        .select("point_id", "p_lat", "p_lon", poly_id)
+    )
     cands = cands.withColumn(
-        "_salt", F.pmod(F.xxhash64("point_id"), F.lit(salt))
+        "_salt", F.pmod(F.xxhash64("point_id"), F.lit(PIP_SALT))
     )
     # ring side of the cogroup: one row per (poly, salt) — the ONLY
     # ring bytes in the refine, independent of candidate count. Columns
@@ -523,7 +461,7 @@ def point_in_polygon_join(
     ).withColumn(
         "_r_salt",
         F.explode(
-            F.sequence(F.lit(0).cast("long"), F.lit(salt - 1).cast("long"))
+            F.sequence(F.lit(0).cast("long"), F.lit(PIP_SALT - 1).cast("long"))
         ),
     )
 

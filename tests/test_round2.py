@@ -1,6 +1,7 @@
-"""Round-2 verification: face-boundary exactness, PIP skew salting,
+"""Round-2 verification: face-edge distances and multi-face encodes,
 hot-bucket caps, vectorized signatures, partitioned way-area stitch,
-lineage output validation, PBF compression guard."""
+lineage output validation, PBF compression guard. (The cross-face and
+PIP-salting join tests live in test_spatial.py.)"""
 
 import numpy as np
 import pytest
@@ -9,17 +10,10 @@ from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from osmptparser_spark.functions import h3x
-from osmptparser_spark.functions.geo import haversine_np
+from tests.test_spatial import _edge_lat
 
 
 # --- face boundaries --------------------------------------------------------
-
-
-def _edge_lat(lon: float) -> float:
-    """Latitude near ``lon`` where a face Voronoi boundary runs."""
-    la = np.linspace(-40.0, 40.0, 4001)
-    d = h3x.face_edge_distance_m(la, np.full_like(la, lon))
-    return float(la[int(np.argmin(d))])
 
 
 def test_face_edge_distance_properties():
@@ -43,95 +37,6 @@ def test_multiface_covers_cross_face_neighbors():
     # far from any edge: exactly one encode
     idx1, cells1 = h3x.latlng_to_cells_multiface([10.0], [5.0], 7, 5000.0)
     assert len(cells1) == 1
-
-
-class TestCrossFaceJoins:
-    @pytest.fixture(scope="class")
-    def straddle(self, spark):
-        """Queries and candidates straddling a face boundary."""
-        el = _edge_lat(18.0)
-        rng = np.random.default_rng(7)
-        q_lat = el + rng.uniform(-0.05, 0.05, 40)
-        q_lon = 18.0 + rng.uniform(-0.05, 0.05, 40)
-        c_lat = el + rng.uniform(-0.08, 0.08, 200)
-        c_lon = 18.0 + rng.uniform(-0.08, 0.08, 200)
-        q = spark.createDataFrame(
-            [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(q_lat, q_lon))],
-            "id BIGINT, lat DOUBLE, lon DOUBLE",
-        )
-        c = spark.createDataFrame(
-            [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(c_lat, c_lon))],
-            "id BIGINT, lat DOUBLE, lon DOUBLE",
-        )
-        return (q_lat, q_lon, c_lat, c_lon, q, c)
-
-    def test_knn_exact_across_face_edge(self, spark, straddle):
-        from osmptparser_spark.operators.spatial import knn_join
-
-        q_lat, q_lon, c_lat, c_lon, q, c = straddle
-        got = {}
-        for r in knn_join(q, c, k=3, res=8, ring=1).collect():
-            got.setdefault(r.query_id, []).append((r.rank, r.cand_id))
-        D = haversine_np(
-            q_lat[:, None], q_lon[:, None], c_lat[None, :], c_lon[None, :]
-        )
-        for qi in range(len(q_lat)):
-            order = np.lexsort((np.arange(len(c_lat)), D[qi]))
-            want = [int(j) for j in order[:3]]
-            have = [cid for _, cid in sorted(got[qi])]
-            assert have == want, f"query {qi}: {have} != {want}"
-
-    def test_within_distance_exact_across_face_edge(self, spark, straddle):
-        from osmptparser_spark.operators.spatial import within_distance_join
-
-        q_lat, q_lon, c_lat, c_lon, q, c = straddle
-        radius = 3000.0
-        got = {
-            (r.point_id, r.stop_id)
-            for r in within_distance_join(q, c, radius_m=radius, res=8).collect()
-        }
-        D = haversine_np(
-            q_lat[:, None], q_lon[:, None], c_lat[None, :], c_lon[None, :]
-        )
-        want = {(int(i), int(j)) for i, j in zip(*np.nonzero(D <= radius))}
-        assert got == want
-
-
-# --- PIP salting ------------------------------------------------------------
-
-
-class TestPipSkew:
-    def test_hot_polygon_splits_and_stays_correct(self, spark):
-        from osmptparser_spark.operators.spatial import point_in_polygon_join
-
-        n = 20_000
-        # half-step offset: no point ever lies exactly on a ring edge
-        pts = spark.range(n).select(
-            F.col("id"),
-            ((F.pmod(F.col("id") * 37, F.lit(1000)) * 2 + 1) / 1000.0 - 1.0).alias("lat"),
-            ((F.pmod(F.col("id") * 13, F.lit(1000)) * 2 + 1) / 1000.0 - 1.0).alias("lon"),
-        )
-        ring = [(-0.75, -0.75), (-0.75, 0.75), (0.75, 0.75), (0.75, -0.75), (-0.75, -0.75)]
-        polys = spark.createDataFrame(
-            [(1, [{"lon": lo, "lat": la} for la, lo in ring])],
-            "poly_id BIGINT, ring ARRAY<STRUCT<lon: DOUBLE, lat: DOUBLE>>",
-        )
-        out = point_in_polygon_join(pts, polys, salt=8)
-        rows = out.collect()
-        # oracle: interior of the square
-        pdf = pts.toPandas()
-        inside = (
-            (pdf["lat"] > -0.75) & (pdf["lat"] < 0.75)
-            & (pdf["lon"] > -0.75) & (pdf["lon"] < 0.75)
-        )
-        assert {r.point_id for r in rows} == set(pdf.loc[inside, "id"])
-        # the hot polygon's candidates really split into several groups
-        n_salts = (
-            pts.select(F.pmod(F.xxhash64("id"), F.lit(8)).alias("s"))
-            .distinct()
-            .count()
-        )
-        assert n_salts > 1
 
 
 # --- dedup caps + vectorized signatures --------------------------------------

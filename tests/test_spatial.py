@@ -1,12 +1,15 @@
-"""Spatial operators (W5-W8): kNN vs brute-force golden, within-distance
-join vs numpy oracle, salted join equivalence on a skewed fixture,
-point-in-polygon vs numpy ray-cast oracle, raster/vector round trip."""
+"""Spatial operators (W5-W8): kNN vs brute-force golden (including each
+escalation level and face-boundary queries), within-distance join vs
+numpy oracle, salted join vs a driver-side cell-equality reference on a
+skewed fixture, point-in-polygon vs numpy ray-cast oracle (including
+hot-polygon salting), raster/vector round trip."""
 
 import numpy as np
 import pytest
 
 from pyspark.sql import functions as F
 
+from osmptparser_spark.functions import h3x
 from osmptparser_spark.functions.geo import haversine_np
 from osmptparser_spark.operators import spatial as sp
 
@@ -32,6 +35,13 @@ def stops_df(spark):
         [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(S_LAT, S_LON))],
         "id BIGINT, lat DOUBLE, lon DOUBLE",
     )
+
+
+def _edge_lat(lon: float) -> float:
+    """Latitude near ``lon`` where a face Voronoi boundary runs."""
+    la = np.linspace(-40.0, 40.0, 4001)
+    d = h3x.face_edge_distance_m(la, np.full_like(la, lon))
+    return float(la[int(np.argmin(d))])
 
 
 def brute_knn(k=3):
@@ -111,6 +121,49 @@ class TestKnnRescue:
         got = {q: [c for _, c in sorted(v)] for q, v in got.items()}
         assert got == golden
 
+    def test_covering_sweep_resolves_before_brute_pass(self, spark, monkeypatch):
+        # query 0's k=2 neighbours lie beyond level 2's guaranteed radius
+        # (ring_guaranteed_m(2*ring, res-1) ~2.8 km) but within the
+        # covering sweep's r3 (4x that): the sweep, not the brute pass,
+        # must resolve it. Query 1 sits in a dense cluster (level 1);
+        # query 2 is ~2,000 km from every candidate (brute pass).
+        k, res, ring = 2, 8, 1
+        g2 = h3x.ring_guaranteed_m(2 * ring, res - 1)
+        qlat = np.array([-1.2, -1.5, 5.0])
+        qlon = np.array([-79.0, -79.3, -62.0])
+        clat = np.array([-1.2 + 0.06, -1.2, -1.2 - 0.08, -1.5004, -1.4990, -1.5008])
+        clon = np.array([-79.0, -79.0 + 0.07, -79.0, -79.3, -79.3006, -79.3009])
+        d = haversine_np(qlat[:, None], qlon[:, None], clat[None, :], clon[None, :])
+        assert (d[0] > g2).all() and np.sort(d[0])[k - 1] < 4.0 * g2
+        q_df = spark.createDataFrame(
+            [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(qlat, qlon))],
+            "id BIGINT, lat DOUBLE, lon DOUBLE",
+        )
+        c_df = spark.createDataFrame(
+            [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(clat, clon))],
+            "id BIGINT, lat DOUBLE, lon DOUBLE",
+        )
+        brute_inputs = []
+        brute_knn = sp._brute_knn
+
+        def spy(short, *args, **kwargs):
+            brute_inputs.append(short)
+            return brute_knn(short, *args, **kwargs)
+
+        monkeypatch.setattr(sp, "_brute_knn", spy)
+        out = sp.knn_join(q_df, c_df, k=k, res=res, ring=ring)
+        (short,) = brute_inputs
+        assert {r.query_id for r in short.collect()} == {2}
+        got = {}
+        for r in out.collect():
+            got.setdefault(r.query_id, []).append((r.rank, r.cand_id))
+        got = {q: [c for _, c in sorted(v)] for q, v in got.items()}
+        want = {
+            qi: [int(j) for j in np.lexsort((np.arange(len(clat)), d[qi]))[:k]]
+            for qi in range(len(qlat))
+        }
+        assert got == want
+
     def test_rescue_max_queries_guard(self, spark):
         rng = np.random.default_rng(4)
         q_df = spark.createDataFrame(
@@ -125,6 +178,54 @@ class TestKnnRescue:
             sp.knn_join(q_df, c_df, k=2, res=8, ring=1, rescue_max_queries=1)
 
 
+class TestCrossFaceJoins:
+    @pytest.fixture(scope="class")
+    def straddle(self, spark):
+        """Queries and candidates straddling a face boundary."""
+        el = _edge_lat(18.0)
+        rng = np.random.default_rng(7)
+        q_lat = el + rng.uniform(-0.05, 0.05, 40)
+        q_lon = 18.0 + rng.uniform(-0.05, 0.05, 40)
+        c_lat = el + rng.uniform(-0.08, 0.08, 200)
+        c_lon = 18.0 + rng.uniform(-0.08, 0.08, 200)
+        q = spark.createDataFrame(
+            [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(q_lat, q_lon))],
+            "id BIGINT, lat DOUBLE, lon DOUBLE",
+        )
+        c = spark.createDataFrame(
+            [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(c_lat, c_lon))],
+            "id BIGINT, lat DOUBLE, lon DOUBLE",
+        )
+        return (q_lat, q_lon, c_lat, c_lon, q, c)
+
+    def test_knn_exact_across_face_edge(self, spark, straddle):
+        q_lat, q_lon, c_lat, c_lon, q, c = straddle
+        got = {}
+        for r in sp.knn_join(q, c, k=3, res=8, ring=1).collect():
+            got.setdefault(r.query_id, []).append((r.rank, r.cand_id))
+        D = haversine_np(
+            q_lat[:, None], q_lon[:, None], c_lat[None, :], c_lon[None, :]
+        )
+        for qi in range(len(q_lat)):
+            order = np.lexsort((np.arange(len(c_lat)), D[qi]))
+            want = [int(j) for j in order[:3]]
+            have = [cid for _, cid in sorted(got[qi])]
+            assert have == want, f"query {qi}: {have} != {want}"
+
+    def test_within_distance_exact_across_face_edge(self, spark, straddle):
+        q_lat, q_lon, c_lat, c_lon, q, c = straddle
+        radius = 3000.0
+        got = {
+            (r.point_id, r.stop_id)
+            for r in sp.within_distance_join(q, c, radius_m=radius, res=8).collect()
+        }
+        D = haversine_np(
+            q_lat[:, None], q_lon[:, None], c_lat[None, :], c_lon[None, :]
+        )
+        want = {(int(i), int(j)) for i, j in zip(*np.nonzero(D <= radius))}
+        assert got == want
+
+
 class TestWithinDistance:
     def test_matches_numpy_oracle(self, queries_df, stops_df):
         radius = 2000.0
@@ -132,7 +233,7 @@ class TestWithinDistance:
             Q_LAT[:, None], Q_LON[:, None], S_LAT[None, :], S_LON[None, :]
         )
         want = {(int(q), int(s)) for q, s in zip(*np.where(d <= radius))}
-        # default ring = guaranteed coverage for the radius
+        # the ring is the guaranteed coverage for the radius
         got8 = {
             (r.point_id, r.stop_id)
             for r in sp.within_distance_join(
@@ -140,14 +241,6 @@ class TestWithinDistance:
             ).collect()
         }
         assert got8 == want
-        # deliberately undersized ring: still no false positives
-        got_narrow = {
-            (r.point_id, r.stop_id)
-            for r in sp.within_distance_join(
-                queries_df, stops_df, radius, res=9, ring=1
-            ).collect()
-        }
-        assert got_narrow.issubset(want)
 
 
 class TestSaltedJoin:
@@ -156,38 +249,38 @@ class TestSaltedJoin:
         hot_lat, hot_lon = -2.19, -79.89
         lats = np.concatenate([np.full(2000, hot_lat) + RNG.normal(0, 1e-4, 2000), Q_LAT])
         lons = np.concatenate([np.full(2000, hot_lon) + RNG.normal(0, 1e-4, 2000), Q_LON])
+        r_lats = np.append(S_LAT, hot_lat)
+        r_lons = np.append(S_LON, hot_lon)
+        r_ids = list(range(len(S_LAT))) + [10_000]
         left = spark.createDataFrame(
             [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(lats, lons))],
             "id BIGINT, lat DOUBLE, lon DOUBLE",
         )
         right = spark.createDataFrame(
-            [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(S_LAT, S_LON))]
-            + [(10_000, hot_lat, hot_lon)],
-            "id BIGINT, lat DOUBLE, lon DOUBLE",
+            [(i, float(a), float(b)) for i, a, b in zip(r_ids, r_lats, r_lons)],
+            "rid BIGINT, lat DOUBLE, lon DOUBLE",
         )
-        plain = sp.cell_join(
-            left.select("id", "lat", "lon"),
-            right.select(F.col("id").alias("rid"), "lat", "lon"),
-            res=7,
-            broadcast_right=False,
-        )
-        salted = sp.salted_cell_join(
-            left.select("id", "lat", "lon"),
-            right.select(F.col("id").alias("rid"), "lat", "lon"),
-            res=7,
-            salt=8,
-        )
-        p = {(r.id, r.rid) for r in plain.select("id", "rid").collect()}
-        s = {(r.id, r.rid) for r in salted.select("id", "rid").collect()}
-        assert p == s and len(p) > 2000  # hot cell pairs present, no dupes/losses
+        salted = sp.salted_cell_join(left, right, res=7, salt=8)
+        got = [(r.id, r.rid) for r in salted.select("id", "rid").collect()]
+        # driver-side reference: every pair whose res-7 home cells are equal
+        l_cells = h3x.latlng_to_cell(lats, lons, 7)
+        r_cells = h3x.latlng_to_cell(r_lats, r_lons, 7)
+        by_cell = {}
+        for rid, c in zip(r_ids, r_cells):
+            by_cell.setdefault(int(c), []).append(rid)
+        want = {
+            (i, rid) for i, c in enumerate(l_cells) for rid in by_cell.get(int(c), [])
+        }
+        assert len(got) == len(set(got))  # exactly one (cell, salt) match per pair
+        assert set(got) == want and len(want) > 2000  # hot cell pairs present
 
 
 class TestPointInPolygon:
     def test_cells_strategy_no_broadcast_nested_loop(self, spark, queries_df):
         # the scale contract: candidate generation is an equi-join on
         # cell, never a BroadcastNestedLoopJoin over the point table —
-        # with a LARGE polygon table the broadcast plan is a
-        # scale-killer; the cells plan must not contain one.
+        # with a LARGE polygon table a broadcast range join is a
+        # scale-killer; the plan must not contain one.
         polys = []
         for pid in range(60):
             cx, cy = -79.5 + 0.01 * pid, -1.5 + 0.005 * pid
@@ -202,13 +295,9 @@ class TestPointInPolygon:
         polys_df = spark.createDataFrame(
             polys, "poly_id BIGINT, ring ARRAY<STRUCT<lon: DOUBLE, lat: DOUBLE>>"
         )
-        out = sp.point_in_polygon_join(queries_df, polys_df, strategy="cells")
+        out = sp.point_in_polygon_join(queries_df, polys_df)
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastNestedLoopJoin" not in plan
-        # and the broadcast strategy (dim-table optimizer choice) does use one
-        out_b = sp.point_in_polygon_join(queries_df, polys_df, strategy="broadcast")
-        plan_b = out_b._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastNestedLoopJoin" in plan_b
 
     def test_cells_strategy_covers_face_boundary_polygon(self, spark):
         # polygon straddling an icosahedron face edge ((8.37, -156.79)
@@ -235,14 +324,11 @@ class TestPointInPolygon:
         rx = np.array([p["lon"] for p in ring])
         ry = np.array([p["lat"] for p in ring])
         want = {(int(i), 1) for i in np.where(sp._ray_cast(plon, plat, rx, ry))[0]}
-        for strat in ("cells", "broadcast"):
-            got = {
-                (r.point_id, r.poly_id)
-                for r in sp.point_in_polygon_join(
-                    pts_df, polys_df, res=7, strategy=strat
-                ).collect()
-            }
-            assert got == want, strat
+        got = {
+            (r.point_id, r.poly_id)
+            for r in sp.point_in_polygon_join(pts_df, polys_df, res=7).collect()
+        }
+        assert got == want
         assert len(want) > 50
 
     def test_cover_cells_res_guard(self):
@@ -279,15 +365,44 @@ class TestPointInPolygon:
             ry = np.array([p["lat"] for p in ring])
             inside = sp._ray_cast(Q_LON, Q_LAT, rx, ry)
             want |= {(int(i), pid) for i in np.where(inside)[0]}
-        for strat in ("cells", "broadcast"):
-            got = {
-                (r.point_id, r.poly_id)
-                for r in sp.point_in_polygon_join(
-                    queries_df, polys_df, strategy=strat
-                ).collect()
-            }
-            assert got == want, strat
+        got = {
+            (r.point_id, r.poly_id)
+            for r in sp.point_in_polygon_join(queries_df, polys_df).collect()
+        }
+        assert got == want
         assert len(want) > 0
+
+
+class TestPipSkew:
+    def test_hot_polygon_splits_and_stays_correct(self, spark):
+        n = 20_000
+        # half-step offset: no point ever lies exactly on a ring edge
+        pts = spark.range(n).select(
+            F.col("id"),
+            ((F.pmod(F.col("id") * 37, F.lit(1000)) * 2 + 1) / 1000.0 - 1.0).alias("lat"),
+            ((F.pmod(F.col("id") * 13, F.lit(1000)) * 2 + 1) / 1000.0 - 1.0).alias("lon"),
+        )
+        ring = [(-0.75, -0.75), (-0.75, 0.75), (0.75, 0.75), (0.75, -0.75), (-0.75, -0.75)]
+        polys = spark.createDataFrame(
+            [(1, [{"lon": lo, "lat": la} for la, lo in ring])],
+            "poly_id BIGINT, ring ARRAY<STRUCT<lon: DOUBLE, lat: DOUBLE>>",
+        )
+        out = sp.point_in_polygon_join(pts, polys)
+        rows = out.collect()
+        # oracle: interior of the square
+        pdf = pts.toPandas()
+        inside = (
+            (pdf["lat"] > -0.75) & (pdf["lat"] < 0.75)
+            & (pdf["lon"] > -0.75) & (pdf["lon"] < 0.75)
+        )
+        assert {r.point_id for r in rows} == set(pdf.loc[inside, "id"])
+        # the hot polygon's candidates really split into several groups
+        n_salts = (
+            pts.select(F.pmod(F.xxhash64("id"), F.lit(sp.PIP_SALT)).alias("s"))
+            .distinct()
+            .count()
+        )
+        assert n_salts > 1
 
 
 class TestRasterVector:
