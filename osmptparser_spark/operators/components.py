@@ -37,8 +37,15 @@ operators") from pairs to actionable clusters.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import time
+
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+# How long a round waits for its observed fingerprint after the
+# checkpoint job returns (the metrics arrive through the listener bus,
+# typically within milliseconds) before it aggregates the edge set.
+_OBSERVATION_WAIT_S = 10.0
 
 
 def _canon(edges: DataFrame) -> DataFrame:
@@ -73,6 +80,28 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return relink.union(self_link)
 
 
+def _fingerprint_exprs():
+    # top-31-bits of xxhash64: summing full-range longs overflows under
+    # ANSI mode; 31-bit summands keep the sum exact (and the
+    # fingerprint order-independent) up to 2^32 edges.
+    return (
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.shiftrightunsigned(F.xxhash64("u", "v"), 33)).alias("h"),
+    )
+
+
+def _observed(obs: Observation, timeout_s: float) -> dict | None:
+    """``obs``'s metrics, or None if they do not arrive within
+    ``timeout_s`` (``Observation.get`` alone would block forever)."""
+    future = obs._jo.future()
+    deadline = time.monotonic() + timeout_s
+    while not future.isCompleted():
+        if time.monotonic() >= deadline:
+            return None
+        time.sleep(0.005)
+    return obs.get
+
+
 def _truncate(df: DataFrame) -> DataFrame:
     spark = df.sparkSession
     if spark.sparkContext.getCheckpointDir() is not None:
@@ -98,32 +127,20 @@ def connected_components(
     2^20 nodes per component with a wide margin, and a loud failure
     beats silently wrong clusters.
     """
-    from pyspark.sql import Observation
-
     e = _canon(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")))
     prev = None  # (n_edges, edge-set hash) of the canonical edge set
     prev_df = None  # previous round's checkpointed edge set
     for _ in range(max_iterations):
         prev_df = e
         e = _canon(_small_star(_large_star(e)))
-        # top-31-bits of xxhash64: summing full-range longs overflows
-        # under ANSI mode; 31-bit summands keep the sum exact (and the
-        # fingerprint order-independent) up to 2^32 edges.
-        # Round 6: the fingerprint rides the checkpoint-materialization
-        # job via observe() instead of a separate agg job per round —
-        # halves the per-round job count; verified populated for both
-        # localCheckpoint and reliable checkpoint.
+        # The fingerprint rides the checkpoint-materialization job via
+        # observe() instead of a separate agg job per round — halves the
+        # per-round job count; verified populated for both
+        # localCheckpoint and reliable checkpoint. If the metrics do not
+        # arrive, the checkpointed edge set is aggregated instead.
         obs = Observation()
-        e = _truncate(
-            e.observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.sum(
-                    F.shiftrightunsigned(F.xxhash64("u", "v"), 33)
-                ).alias("h"),
-            )
-        )
-        m = obs.get
+        e = _truncate(e.observe(obs, *_fingerprint_exprs()))
+        m = _observed(obs, _OBSERVATION_WAIT_S) or e.agg(*_fingerprint_exprs()).first()
         n, h = m["n"], m["h"]
         # The fingerprint is only a fast PRE-check: a collision between
         # successive non-equal edge sets would otherwise terminate early
@@ -154,7 +171,6 @@ def near_dup_clusters(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.5,
-    **minhash_kwargs,
 ) -> DataFrame:
     """End-to-end fuzzy-dedup clustering: MinHash/LSH pairs →
     connected components → ``(doc_id, component_id)``.
@@ -166,7 +182,7 @@ def near_dup_clusters(
     from .dedup import minhash_lsh_pairs
 
     pairs = minhash_lsh_pairs(
-        df, text_col=text_col, id_col=id_col, threshold=threshold, **minhash_kwargs
+        df, text_col=text_col, id_col=id_col, threshold=threshold
     )
     comp = connected_components(pairs, "id_a", "id_b")
     return (

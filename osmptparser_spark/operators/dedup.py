@@ -27,7 +27,15 @@ import pandas as pd
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-_MERSENNE = (1 << 61) - 1
+# MinHash lanes are h(x) = (a*x + b) mod p with a, b, x < p: a*x+b <
+# 2^62 fits uint64 and wraps p many times, so each lane mixes well. A
+# modulus far above a*x's range would rarely wrap: the hash would rise
+# with x, and the smallest shingles would win most lanes.
+_MERSENNE = (1 << 31) - 1
+
+# Broadcast the verify join's shingle arrays only while they fit in
+# this many bytes (8 per shingle hash); above it the join shuffles.
+_VERIFY_BROADCAST_MAX_BYTES = 1 << 30
 
 # polynomial rolling-hash base: odd (invertible mod 2^64), large
 _B = np.uint64(0x100000001B3)  # FNV-1a prime
@@ -117,17 +125,34 @@ def _segment_hashes(buf: np.ndarray, starts: np.ndarray, ends: np.ndarray) -> np
         return _splitmix64(h)
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Repartition up to the session's default parallelism when the
-    input arrives in fewer partitions (a small parquet file reads as
-    ONE split, which would run every downstream python stage on one
-    core). At real scale the input has >= cores splits and this is a
-    no-op — no shuffle is added.
+def _shuffle_rooted(plan) -> bool:
+    """True when the physical ``plan`` reads from an exchange or from a
+    finished query stage. A cached relation is a leaf here, whatever
+    plan built it."""
+    name = plan.nodeName()
+    if "Exchange" in name or (
+        name.endswith("QueryStage") and name != "TableCacheQueryStage"
+    ):
+        return True
+    if name == "AdaptiveSparkPlan":
+        return _shuffle_rooted(plan.executedPlan())
+    kids = plan.children()
+    return any(_shuffle_rooted(kids.apply(i)) for i in range(kids.size()))
 
-    Only call this on scan-rooted inputs: ``.rdd`` under AQE forces
-    ``getFinalPhysicalPlan``, which EXECUTES every shuffle stage of a
-    composite plan just to read a partition count (callers with joins
-    upstream pass ``spread=False`` instead)."""
+
+def _spread(df: DataFrame) -> DataFrame:
+    """Repartition up to the session's default parallelism when a
+    scan-rooted input arrives in fewer partitions (a small parquet file
+    reads as ONE split, which would run every downstream python stage
+    on one core). At real scale the input has >= cores splits and this
+    is a no-op — no shuffle is added.
+
+    An input with a shuffle upstream is returned as it is, decided from
+    its unexecuted physical plan: the partition-count probe's ``.rdd``
+    under AQE forces ``getFinalPhysicalPlan``, which EXECUTES every
+    shuffle stage of a composite plan just to read a number."""
+    if _shuffle_rooted(df._jdf.queryExecution().executedPlan()):
+        return df
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
@@ -139,15 +164,8 @@ def shingle_df(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 9,
-    spread: bool = True,
 ) -> DataFrame:
-    """id -> array of distinct shingle hashes (mapInPandas, Arrow batches).
-
-    ``spread=False`` skips the small-input repartition probe — required
-    when ``df`` is not scan-rooted (see ``_spread``: the probe's
-    ``.rdd`` would eagerly execute the upstream joins under AQE)."""
-    if spread:
-        df = _spread(df)
+    """id -> array of distinct shingle hashes (mapInPandas, Arrow batches)."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -170,64 +188,29 @@ def shingle_df(
 
 def _minhash_params(num_hashes: int, seed: int):
     rng = np.random.default_rng(seed)
-    a = rng.integers(1, 1 << 31, num_hashes).astype(np.uint64)
-    b = rng.integers(0, 1 << 31, num_hashes).astype(np.uint64)
+    a = rng.integers(1, _MERSENNE, num_hashes).astype(np.uint64)
+    b = rng.integers(0, _MERSENNE, num_hashes).astype(np.uint64)
     return a, b
 
 
-def minhash_signatures(
-    shingles: DataFrame, num_hashes: int = 64, seed: int = 42
-) -> DataFrame:
-    """MinHash signatures over shingle arrays: h_i(x) = (a_i x32 + b_i)
-    mod p, pure uint64 numpy (a_i, b_i < 2^31 and x folded to 32 bits,
-    so a*x+b < 2^63 never overflows; p = 2^61 - 1)."""
-    a, b = _minhash_params(num_hashes, seed)
-    p = np.uint64(_MERSENNE)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "signature": []})
-                continue
-            arrs = [np.asarray(s, dtype=np.int64) for s in pdf["shingles"]]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "signature": list(_min_sig(arrs, a, b, num_hashes))}
-            )
-
-    return shingles.mapInPandas(gen, "doc_id BIGINT, signature ARRAY<BIGINT>")
-
-
 def _min_sig(arrs, a: np.ndarray, b: np.ndarray, num_hashes: int) -> np.ndarray:
-    """(len(arrs), num_hashes) int64 MinHash matrix over shingle-hash
-    arrays. Chunked matrices instead of a per-doc loop: concat docs'
-    shingles until ~4k rows, hash the (chunk_S, m) lanes in one shot,
-    per-doc column minima via minimum.reduceat over doc boundary
-    offsets. The chunk bound keeps the work matrix ~2 MB so it lives
-    in per-core cache — many executor threads each streaming
-    multi-10s-of-MB matrices saturate shared memory bandwidth/LLC on a
-    dense host (measured: 30x vCPU-time inflation at 32-way
-    parallelism with 64 MB chunks)."""
+    """(len(arrs), num_hashes) int64 MinHash matrix over non-empty
+    shingle-hash arrays: h_i(x) = (a_i x + b_i) mod p, x the 64-bit
+    shingle hash folded to 32 bits and reduced mod p, pure uint64 numpy.
+
+    Chunked matrices instead of a per-doc loop: concat docs' shingles
+    until ~4k rows, hash the (chunk_S, m) lanes in one shot, per-doc
+    column minima via minimum.reduceat over doc boundary offsets. The
+    chunk bound keeps the work matrix ~2 MB so it lives in per-core
+    cache — many executor threads each streaming multi-10s-of-MB
+    matrices saturate shared memory bandwidth/LLC on a dense host
+    (measured: 30x vCPU-time inflation at 32-way parallelism with
+    64 MB chunks)."""
     p = np.uint64(_MERSENNE)
     lens = np.fromiter((len(s) for s in arrs), dtype=np.int64, count=len(arrs))
     sig_out = np.empty((len(arrs), num_hashes), dtype=np.int64)
-    # Empty shingle sets get the reduction identity (min over nothing =
-    # p, the Mersenne modulus: strictly above every real hash value).
-    # Without this, a zero-length segment makes minimum.reduceat
-    # silently return the NEXT doc's first hash row as this doc's
-    # signature (numpy reduceat semantics), or raise at chunk end —
-    # unreachable via _shingle_hashes (always >= 1 hash) but
-    # minhash_signatures is public API over arbitrary shingle arrays.
-    empty = lens == 0
-    if empty.any():
-        sig_out[empty] = np.int64(_MERSENNE)
-        keep = np.flatnonzero(~empty)
-        if len(keep) == 0:
-            return sig_out
-        sub = _min_sig([arrs[i] for i in keep], a, b, num_hashes)
-        sig_out[keep] = sub
-        return sig_out
     CHUNK_S = 4096
-    shift = np.uint64(61)
+    shift = np.uint64(31)
     lo = 0
     while lo < len(arrs):
         hi, tot = lo, 0
@@ -235,16 +218,19 @@ def _min_sig(arrs, a: np.ndarray, b: np.ndarray, num_hashes: int) -> np.ndarray:
             tot += lens[hi]
             hi += 1
         x = np.concatenate(arrs[lo:hi]).astype(np.uint64)
-        x32 = (x >> np.uint64(32)) ^ (x & np.uint64(0xFFFFFFFF))
-        # (chunk_S, m) in uint64: max (2^31)(2^32)+2^31 < 2^63;
-        # in-place ops — one live matrix, no temporaries
-        y = x32[:, None] * a[None, :]
+        x = ((x >> np.uint64(32)) ^ (x & np.uint64(0xFFFFFFFF))) % p
+        # (chunk_S, m) in uint64: max (p-1)^2 + p < 2^62; in-place ops
+        # — one live matrix plus one fold buffer
+        y = x[:, None] * a[None, :]
         y += b[None, :]
-        # branchless Mersenne-61 reduction: for y < 2^63,
-        # (y & p) + (y >> 61) < p + 4, one conditional subtract
-        # finishes — identical to y % p without the hardware
-        # division (the measured hot op of this stage)
+        # branchless Mersenne-31 reduction: two folds y = (y & p) +
+        # (y >> 31) take y < 2^62 to <= p, one conditional subtract
+        # finishes — identical to y % p without the hardware division
+        # (the measured hot op of this stage)
         hi_bits = y >> shift
+        y &= p
+        y += hi_bits
+        np.right_shift(y, shift, out=hi_bits)
         y &= p
         y += hi_bits
         np.subtract(y, p, out=y, where=y >= p)
@@ -265,9 +251,8 @@ def minhash_signatures_from_text(
     """Fused text -> MinHash signature in ONE Arrow pass: shingle
     hashes stay numpy-local inside the worker instead of round-tripping
     a corpus-sized ARRAY<BIGINT> column through the serializer and the
-    block cache (the measured dominant cost of the two-stage
-    shingle_df -> minhash_signatures path: the shingle column is
-    ~8 bytes x corpus characters, 10-30x the signature column)."""
+    block cache (the shingle column is ~8 bytes x corpus characters,
+    10-30x the signature column)."""
     a, b = _minhash_params(num_hashes, seed)
     df = _spread(df)
 
@@ -333,8 +318,6 @@ def minhash_lsh_pairs(
     seed: int = 42,
     max_bucket_size: int = 256,
     observation: Observation | None = None,
-    materialize: bool = True,
-    verify_broadcast_max_docs: int = 1_000_000,
 ) -> DataFrame:
     """MinHash+LSH near-dup pairs with EXACT jaccard verification.
 
@@ -357,16 +340,15 @@ def minhash_lsh_pairs(
     candidate pairs still shingles once (the rehydrate is keyed by
     distinct doc id and cached).
 
-    ``materialize`` caches + materializes the (id, text) projection,
-    which both the signature pass and the verify rehydrate read;
-    parallel query stages racing an unmaterialized cache would each
-    recompute the upstream plan (measured ~2x end-to-end at sf0.1).
+    The (id, text) projection, which both the signature pass and the
+    verify rehydrate read, is cached and materialized first: parallel
+    query stages racing an unmaterialized cache would each recompute
+    the upstream plan (measured ~2x end-to-end at sf0.1).
     """
     rows_per_band = num_hashes // bands
     docs = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_mh_text"))
     docs = docs.cache()
-    if materialize:
-        docs.count()
+    docs.count()
     sig = minhash_signatures_from_text(
         docs, "_mh_text", "doc_id", k, num_hashes, seed
     )
@@ -401,8 +383,7 @@ def minhash_lsh_pairs(
     # join — cache (and materialize) it or the whole signature +
     # banding + self-join pipeline executes twice
     cands = cands.cache()
-    if materialize:
-        cands.count()
+    cands.count()
     # rehydrate shingle arrays for candidate docs ONLY (semi-join on
     # the distinct ids in any pair), then verify JVM-side
     cand_ids = (
@@ -410,11 +391,8 @@ def minhash_lsh_pairs(
         .union(cands.select(F.col("id_b").alias("doc_id")))
         .distinct()
     )
-    # spread=False: the input is join-rooted, and the partition-count
-    # probe would execute the semi-join once just to read a number
     sh = shingle_df(
-        docs.join(cand_ids, "doc_id", "left_semi"), "_mh_text", "doc_id", k,
-        spread=False,
+        docs.join(cand_ids, "doc_id", "left_semi"), "_mh_text", "doc_id", k
     ).cache()
     # Verify-join strategy (round 6, guide §3.1): the candidate set can
     # be orders of magnitude larger than the candidate-DOC set (every
@@ -425,16 +403,17 @@ def minhash_lsh_pairs(
     # table fits comfortably in memory, broadcast it instead: pairs
     # stream map-side through two broadcast hash joins and the arrays
     # cross the cluster once per executor, not once per pair. Memory
-    # contract: ~n_cand_docs x avg-shingle-array bytes (~1 KB/doc at
-    # web text sizes -> ~1 GB at the 10^6 default, inside the 8 GB
-    # broadcast cap); above the threshold the plan falls back to the
-    # shuffle join unchanged. The count doubles as the cache
-    # materialization the two consumers need anyway.
+    # contract: the arrays' measured bytes (8 per shingle hash) stay
+    # under _VERIFY_BROADCAST_MAX_BYTES, inside the 8 GB broadcast cap;
+    # above it the plan falls back to the shuffle join unchanged. The
+    # byte sum doubles as the cache materialization the two consumers
+    # need anyway.
     a_side = sh.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a"))
     b_side = sh.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b"))
     na_side = sh.select(F.col("doc_id").alias("id_a"), F.size("shingles").alias("_n_a"))
     nb_side = sh.select(F.col("doc_id").alias("id_b"), F.size("shingles").alias("_n_b"))
-    if materialize and sh.count() <= verify_broadcast_max_docs:
+    n_shingles = sh.agg(F.sum(F.size("shingles"))).first()[0] or 0
+    if 8 * n_shingles <= _VERIFY_BROADCAST_MAX_BYTES:
         a_side, b_side = F.broadcast(a_side), F.broadcast(b_side)
         na_side, nb_side = F.broadcast(na_side), F.broadcast(nb_side)
     # Sound size-ratio prune before the arrays ever attach:
@@ -516,21 +495,17 @@ def simhash_df(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    bits: int = 64,
-    spread: bool = True,
 ) -> DataFrame:
     """64-bit SimHash over whitespace tokens. Batch-vectorized: token
     hashes via the segment prefix-hash over one concatenated buffer per
     Arrow batch, bit votes via unpackbits + reduceat — no per-doc,
     per-token, or per-bit Python loops (see ``_simhash_batch``).
 
-    ``spread`` repartitions a small scan-rooted input up to the default
+    A small scan-rooted input is repartitioned up to the default
     parallelism (see ``_spread``) — a single-split parquet corpus would
     otherwise run the whole signature pass in ONE python task (measured
-    at sf1.0: the full corpus pass was serialized on one core). Pass
-    ``spread=False`` for join-rooted inputs."""
-    if spread:
-        df = _spread(df)
+    at sf1.0: the full corpus pass was serialized on one core)."""
+    df = _spread(df)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -620,22 +595,9 @@ def ngram_jaccard_pairs(
             )
         ).alias("grams"),
     ).withColumn("n_grams", F.size("grams"))
-    from pyspark.sql.window import Window
-
     inv = grams.select("doc_id", "n_grams", F.explode("grams").alias("gram"))
-    # document frequency via a window over the gram key (same hash
-    # partitioning the self-join uses; a broadcast freq table would not
-    # survive web-scale gram cardinality)
-    inv = inv.withColumn(
-        "df_", F.count("*").over(Window.partitionBy("gram"))
-    ).withColumn("_keep", F.col("df_") <= max_ngram_freq)
-    if observation is not None:
-        inv = inv.observe(
-            observation,
-            F.sum(F.when(F.col("_keep"), 1).otherwise(0)).alias("ngram_rows_kept"),
-            F.sum(F.when(F.col("_keep"), 0).otherwise(1)).alias("ngram_rows_dropped"),
-        )
-    inv = inv.filter(F.col("_keep")).drop("df_", "_keep")
+    # stop-gram cap: a gram's postings are a bucket (see _cap_buckets)
+    inv = _cap_buckets(inv, ["gram"], max_ngram_freq, observation, "ngram")
     pairs = (
         inv.alias("a")
         .join(

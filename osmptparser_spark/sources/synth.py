@@ -102,11 +102,6 @@ def synth_geo_entities(
     return nodes, ways, relations
 
 
-def synth_pages(n_routes: int = 1000, seed: int = 42, entities_per_page: int = 50):
-    nodes, ways, relations = synth_geo_entities(n_routes=n_routes, seed=seed)
-    return entities_to_pages(nodes, ways, relations, entities_per_page)
-
-
 def synth_pages_spark(
     spark,
     n_routes: int = 1000,

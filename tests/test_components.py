@@ -66,6 +66,32 @@ def test_random_graphs_match_union_find(spark):
         assert _run(spark, edges) == _uf_reference(edges)
 
 
+def test_missing_observation_falls_back_to_aggregate(spark, monkeypatch):
+    from pyspark.sql import Observation
+
+    from osmptparser_spark.operators import components
+
+    # the bounded wait gives up on metrics that never arrive
+    never_run = Observation()
+    spark.range(3).observe(never_run, F.count(F.lit(1)).alias("n"))
+    assert components._observed(never_run, 0.05) is None
+
+    # with no observed fingerprint at all, every round aggregates its
+    # checkpointed edge set and still converges to union-find
+    waits = []
+
+    def missing(obs, timeout_s):
+        waits.append(timeout_s)
+        return None
+
+    monkeypatch.setattr(components, "_observed", missing)
+    rng = random.Random(11)
+    edges = [(rng.randrange(120), rng.randrange(120)) for _ in range(90)]
+    edges = [(a, b) for a, b in edges if a != b]
+    assert _run(spark, edges) == _uf_reference(edges)
+    assert waits
+
+
 def test_non_convergence_raises(spark):
     df = spark.createDataFrame(
         spark.sparkContext.parallelize([(1, 2)], 1), "id_a BIGINT, id_b BIGINT"

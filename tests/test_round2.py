@@ -1,12 +1,12 @@
 """Round-2 verification: face-edge distances and multi-face encodes,
-hot-bucket caps, vectorized signatures, partitioned way-area stitch,
-lineage output validation, PBF compression guard. (The cross-face and
-PIP-salting join tests live in test_spatial.py.)"""
+partitioned way-area stitch, lineage output validation, PBF compression
+guard. (The cross-face and PIP-salting join tests live in
+test_spatial.py; the hot-bucket cap and vectorized-signature tests in
+test_dedup_similarity.py.)"""
 
 import numpy as np
 import pytest
 
-from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from osmptparser_spark.functions import h3x
@@ -37,71 +37,6 @@ def test_multiface_covers_cross_face_neighbors():
     # far from any edge: exactly one encode
     idx1, cells1 = h3x.latlng_to_cells_multiface([10.0], [5.0], 7, 5000.0)
     assert len(cells1) == 1
-
-
-# --- dedup caps + vectorized signatures --------------------------------------
-
-
-class TestDedupRound2:
-    def test_hot_bucket_cap_bounds_degenerate_corpus(self, spark):
-        from osmptparser_spark.operators.dedup import minhash_lsh_pairs
-
-        boiler = [(i, "the same boilerplate page body " * 10) for i in range(300)]
-        distinct = [
-            (1000 + i, f"unique document {i} " + " ".join(f"w{i}{j}" for j in range(60)))
-            for i in range(10)
-        ]
-        planted = [(2000 + i, t + " tail") for i, (_, t) in enumerate(distinct)]
-        df = spark.createDataFrame(
-            boiler + distinct + planted, "doc_id BIGINT, text STRING"
-        )
-        obs = Observation("minhash_cap")
-        pairs = minhash_lsh_pairs(
-            df, threshold=0.5, max_bucket_size=64, observation=obs
-        ).collect()
-        found = {(p.id_a, p.id_b) for p in pairs}
-        for i in range(10):
-            assert (1000 + i, 2000 + i) in found
-        # boilerplate flood was capped, visibly (not silently)
-        assert obs.get["minhash_rows_dropped"] > 0
-        # and no quadratic boilerplate pair survived into the output
-        assert not any(a < 300 and b < 300 for a, b in found)
-
-    def test_simhash_vectorized_matches_planted(self, spark):
-        from osmptparser_spark.operators.dedup import simhash_df, simhash_near_dup_pairs
-
-        docs = [
-            (i, f"alpha beta gamma delta {i} " + " ".join(f"t{j}" for j in range(30)))
-            for i in range(20)
-        ]
-        copies = [(100 + i, t) for i, (_, t) in enumerate(docs[:5])]
-        df = spark.createDataFrame(docs + copies, "doc_id BIGINT, text STRING")
-        pairs = simhash_near_dup_pairs(df, max_hamming=3).collect()
-        found = {(p.id_a, p.id_b) for p in pairs}
-        for i in range(5):
-            assert (i, 100 + i) in found
-        hashes = {r.doc_id: r.simhash for r in simhash_df(df).collect()}
-        for p in pairs:
-            assert p.hamming == bin(
-                (hashes[p.id_a] ^ hashes[p.id_b]) & ((1 << 64) - 1)
-            ).count("1")
-
-    def test_ngram_observation_reports_cap(self, spark):
-        from osmptparser_spark.operators.dedup import ngram_jaccard_pairs
-
-        # 50 docs sharing hot grams (capped away) + one identical pair of
-        # unique docs: the output must stay non-empty, else AQE's
-        # empty-relation propagation prunes the observed subtree and the
-        # metrics never materialize
-        rows = [(i, "x y z common tail " + f"doc{i}") for i in range(50)]
-        rows += [(200, "uniq pair alpha beta gamma"), (201, "uniq pair alpha beta gamma")]
-        df = spark.createDataFrame(rows, "doc_id BIGINT, text STRING")
-        obs = Observation("ngram_cap")
-        pairs = ngram_jaccard_pairs(
-            df, n=3, threshold=0.9, max_ngram_freq=10, observation=obs
-        ).collect()
-        assert {(p.id_a, p.id_b) for p in pairs} == {(200, 201)}
-        assert obs.get["ngram_rows_dropped"] > 0
 
 
 # --- partitioned way-area stitch ---------------------------------------------

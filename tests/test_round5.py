@@ -1,6 +1,6 @@
 """Round-5 additions: pure-python PNG codec, interval_join tiering +
-outlier guard, MinHash empty-shingle sentinel, packing shard-range
-guard, cogrouped point-in-polygon refine."""
+outlier guard, packing shard-range guard, cogrouped point-in-polygon
+refine."""
 
 import numpy as np
 import pandas as pd
@@ -136,44 +136,6 @@ class TestIntervalJoinTiers:
         out = interval_join(pdf, idf, bucket_width=1)
         got = {(r.pid, r.iid) for r in out.select("pid", "iid").collect()}
         assert got == {(1, 7), (1, 8), (1, 9), (2, 9), (3, 9)}
-
-
-# --- MinHash empty-shingle sentinel -------------------------------------------
-
-
-class TestMinhashEmptySegments:
-    def test_empty_shingle_arrays_get_sentinel_not_neighbor(self, spark):
-        from osmptparser_spark.operators.dedup import (
-            _MERSENNE,
-            minhash_signatures,
-        )
-        from osmptparser_spark.session import local_df
-
-        rows = [
-            (0, [11, 12, 13]),
-            (1, []),          # mid-batch empty: used to STEAL doc 2's row
-            (2, [21, 22]),
-            (3, []),          # trailing empty: used to raise IndexError
-        ]
-        sh = local_df(spark, rows, "doc_id BIGINT, shingles ARRAY<BIGINT>")
-        got = {
-            r.doc_id: list(r.signature)
-            for r in minhash_signatures(sh, num_hashes=8).collect()
-        }
-        assert got[1] == [_MERSENNE] * 8
-        assert got[3] == [_MERSENNE] * 8
-        # non-empty docs unaffected: recompute standalone
-        solo = local_df(
-            spark, [(0, [11, 12, 13]), (2, [21, 22])],
-            "doc_id BIGINT, shingles ARRAY<BIGINT>",
-        )
-        want = {
-            r.doc_id: list(r.signature)
-            for r in minhash_signatures(solo, num_hashes=8).collect()
-        }
-        assert got[0] == want[0] and got[2] == want[2]
-        # real signatures never collide with the sentinel
-        assert all(v != _MERSENNE for v in got[0] + got[2])
 
 
 # --- Uber-H3 compatibility adapter ---------------------------------------------

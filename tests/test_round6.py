@@ -1,13 +1,11 @@
 """Round-6 optimization guards: the reworked internals must be
 bit/row-identical to their reference formulations.
 
-* ``_simhash_batch`` (batch-vectorized) vs the per-doc reference
-  formulation it replaced;
-* ``minhash_lsh_pairs`` broadcast-verify path vs the shuffle-verify
-  fallback (verify_broadcast_max_docs=0 forces the old plan);
 * ``_stitch_many`` column-accumulator rework vs per-relation
   ``stitch_core.flatten`` (the scalar reference);
 * extraction ``{}`` fast path on a mixed empty/non-empty tag corpus.
+
+(The simhash and minhash-verify guards live in test_dedup_similarity.py.)
 """
 
 import numpy as np
@@ -15,63 +13,6 @@ import pandas as pd
 import pytest
 
 from pyspark.sql import functions as F
-
-
-def _simhash_one_reference(t: str) -> int:
-    """The pre-round-6 per-doc formulation (kept verbatim as the
-    equivalence reference)."""
-    from osmptparser_spark.operators.dedup import _segment_hashes
-
-    tokens = t.split()
-    if not tokens:
-        return 0
-    raw = [tok.encode("utf-8") for tok in tokens]
-    lens = np.fromiter((len(r) for r in raw), dtype=np.int64, count=len(raw))
-    buf = np.frombuffer(b"".join(raw), dtype=np.uint8)
-    ends = np.cumsum(lens)
-    starts = ends - lens
-    hs = _segment_hashes(buf, starts, ends)
-    bits_m = np.unpackbits(
-        hs.view(np.uint8).reshape(-1, 8), axis=1, bitorder="little"
-    )
-    votes = 2 * bits_m.sum(axis=0, dtype=np.int64) - len(tokens)
-    weights = np.left_shift(np.uint64(1), np.arange(64, dtype=np.uint64))
-    h = int((weights * (votes > 0).astype(np.uint64)).sum(dtype=np.uint64))
-    return h - (1 << 64) if h >= (1 << 63) else h
-
-
-def test_simhash_batch_matches_per_doc_reference():
-    from osmptparser_spark.operators.dedup import _simhash_batch
-
-    rng = np.random.default_rng(7)
-    vocab = ["alpha", "beta", "gamma", "zqxjv", "tail", "ünïcode", "x"]
-    texts = []
-    for i in range(200):
-        n = int(rng.integers(0, 40))
-        texts.append(" ".join(rng.choice(vocab, n)))
-    # edge cases: empty, whitespace-only, tabs/newlines, single token
-    texts += ["", "   ", "\t\n ", "solo", " lead", "trail "]
-    got = _simhash_batch(texts)
-    want = np.array([_simhash_one_reference(t) for t in texts], dtype=np.int64)
-    assert np.array_equal(got, want)
-
-
-def test_minhash_broadcast_and_shuffle_verify_agree(spark):
-    from osmptparser_spark.operators.dedup import minhash_lsh_pairs
-
-    rows = []
-    base = "the quick brown fox jumps over the lazy dog " * 4
-    for i in range(40):
-        rows.append((i, base + f"suffix {i % 5}"))
-    rows.append((1000, base + "suffix 0 tail"))
-    df = spark.createDataFrame(rows, "doc_id BIGINT, text STRING")
-    kw = dict(threshold=0.5, max_bucket_size=256)
-    bcast = minhash_lsh_pairs(df, verify_broadcast_max_docs=1_000_000, **kw)
-    shuf = minhash_lsh_pairs(df, verify_broadcast_max_docs=0, **kw)
-    cols = ["id_a", "id_b", "n_common", "n_union"]
-    got = sorted(tuple(r) for r in bcast.select(cols).collect())
-    want = sorted(tuple(r) for r in shuf.select(cols).collect())
-    assert got == want and len(got) > 0
 
 
 def test_stitch_many_matches_per_group():
