@@ -15,8 +15,6 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-import pandas as _pd
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -227,12 +225,9 @@ def _q_w7_knn_topk(spark, sf_dir):
 
 def _q_dedup_exact(spark, sf_dir):
     # Exact dedup: hash-groupBy on content, keep min id (training-data op).
-    d = _t(spark, sf_dir, "documents")
-    return (
-        d.groupBy(F.md5("text").alias("text_hash"))
-        .agg(F.min("doc_id").alias("keep_id"), F.count("*").alias("n_copies"))
-        .select("text_hash", "keep_id", "n_copies")
-    )
+    from osmptparser_spark.operators.dedup import dedup_exact
+
+    return dedup_exact(_t(spark, sf_dir, "documents"))
 
 
 def _q_text_token_count(spark, sf_dir):
@@ -247,16 +242,16 @@ def _q_text_token_count(spark, sf_dir):
 
 
 def _q_lang_id(spark, sf_dir):
-    # Language-ID heuristic: stopword-marker counts ('the' vs 'de'/'la')
-    # via replace-length arithmetic; integer div keeps both engines exact.
+    # Language-ID heuristic over one marker per language ('the' vs 'de')
+    # through the library's marker counter: the length drop of the
+    # padded text is always a whole number of markers, so its division
+    # is exact in both engines.
+    from osmptparser_spark.functions.text import lang_score
+
     d = _t(spark, sf_dir, "documents")
-    padded = F.concat(F.lit(" "), F.col("text"), F.lit(" "))
-    n_the = F.expr(
-        "CAST(div(length(concat(' ', text, ' ')) - length(replace(concat(' ', text, ' '), ' the ', '')), 5) AS BIGINT)"
-    )
-    n_de = F.expr(
-        "CAST(div(length(concat(' ', text, ' ')) - length(replace(concat(' ', text, ' '), ' de ', '')), 4) AS BIGINT)"
-    )
+    t = F.col("text")
+    n_the = lang_score(t, ("the",))
+    n_de = lang_score(t, ("de",))
     return d.select(
         "doc_id",
         n_the.alias("n_the"),
@@ -268,9 +263,19 @@ def _q_lang_id(spark, sf_dir):
     )
 
 
+def _q_lang_id_lib(spark, sf_dir):
+    # The library's language-ID vote as shipped: 5 English against 5
+    # Spanish stopword markers (the lang_id entry is a 1 + 1 vote).
+    from osmptparser_spark.functions.text import lang_id
+
+    d = _t(spark, sf_dir, "documents")
+    return d.select("doc_id", lang_id(F.col("text")).alias("lang_guess"))
+
+
 def _q_events_hourly(spark, sf_dir):
-    # Windowed aggregation over the event-time table (streaming-shaped
-    # query run in batch; the streaming module reuses the same logic).
+    # Windowed aggregation over the event-time table with exact distinct
+    # users (streaming-shaped query run in batch; the streaming module's
+    # own windowed_counts is checked by events_windowed).
     ev = _t(spark, sf_dir, "events")
     return (
         ev.groupBy(
@@ -287,53 +292,35 @@ def _q_events_hourly(spark, sf_dir):
     )
 
 
+def _q_events_windowed(spark, sf_dir):
+    # The streaming module's tumbling-window counts, run in batch.
+    # approx_users is an HLL estimate that differs across engines, so it
+    # is checked by the streaming tests, not here.
+    from osmptparser_spark.streaming.events import windowed_counts
+
+    w = windowed_counts(_t(spark, sf_dir, "events"))
+    return w.select(
+        F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
+        "event_type",
+        "cnt",
+    )
+
+
 def _q_emb_cosine_topk(spark, sf_dir):
     # Similarity search baseline: brute-force cosine top-3 per query
-    # vector (query set = vec_id < 25). Round 6: the per-pair cosine is
-    # ONE vectorized Arrow pandas UDF over the pair batch (float32
-    # products, float64 accumulation — the same precision ladder the
-    # previous zip_with/aggregate expression chain used) instead of
-    # three interpreted higher-order-function folds per pair; ranks are
-    # oracle-identical (verified at every sf) because neighbor margins
-    # dwarf summation-order ulps.
+    # vector (query set = vec_id < 25), scored by the library's Arrow
+    # cosine kernel; ranks are oracle-identical because neighbor
+    # margins dwarf summation-order ulps.
+    from osmptparser_spark.operators.similarity import cosine_topk_bruteforce
+
     emb = _t(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 25).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
-    )
-    c = emb.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cv"))
-
-    @F.pandas_udf("double")
-    def _cos_batch(qv: _pd.Series, cv: _pd.Series) -> _pd.Series:
-        import numpy as _np
-
-        if len(qv) == 0:
-            return _pd.Series([], dtype="float64")
-        Q = _np.stack(qv.to_numpy())  # float32, as stored
-        C = _np.stack(cv.to_numpy())
-        prod = Q * C  # float32 products == JVM zip_with(a*b) on floats
-        dot = prod.sum(axis=1, dtype=_np.float64)
-        nq = _np.sqrt((Q * Q).sum(axis=1, dtype=_np.float64))
-        nc = _np.sqrt((C * C).sum(axis=1, dtype=_np.float64))
-        return _pd.Series(dot / (nq * nc))
-
-    w = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(), F.col("cid"))
-    return (
-        q.crossJoin(c)
-        .filter(F.col("qid") != F.col("cid"))
-        .withColumn("cos_sim", _cos_batch(F.col("qv"), F.col("cv")))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 3)
-        .select("qid", "cid", "rank")
-    )
+    q = emb.filter(F.col("vec_id") < 25)
+    return cosine_topk_bruteforce(q, emb, k=3).select("qid", "cid", "rank")
 
 
 def _q_text_quality(spark, sf_dir):
     # Quality scoring (expression-only): token/punct stats + [0,1] score.
-    from osmptparser_spark.functions.text import (
-        punct_ratio,
-        quality_score,
-        token_count_ws,
-    )
+    from osmptparser_spark.functions.text import quality_score, token_count_ws
 
     d = _t(spark, sf_dir, "documents")
     t = F.col("text")
@@ -569,6 +556,17 @@ def _q_ngram_jaccard(spark, sf_dir):
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     return ngram_jaccard_pairs(
         d.select("doc_id", "text"), n=3, threshold=0.15
+    ).select("id_a", "id_b", "n_common", "n_union")
+
+
+def _q_ngram_jaccard_planted(spark, sf_dir):
+    # ngram_jaccard over _minhash_input: its planted near-dups (text +
+    # " tail") give pairs at every scale factor, where the first 200
+    # documents alone have none above 0.15 at sf0.1.
+    from osmptparser_spark.operators.dedup import ngram_jaccard_pairs
+
+    return ngram_jaccard_pairs(
+        _minhash_input(spark, sf_dir), n=3, threshold=0.5
     ).select("id_a", "id_b", "n_common", "n_union")
 
 
@@ -1204,7 +1202,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_exact": _q_dedup_exact,
         "text_token_count": _q_text_token_count,
         "lang_id": _q_lang_id,
+        "lang_id_lib": _q_lang_id_lib,
         "events_hourly": _q_events_hourly,
+        "events_windowed": _q_events_windowed,
         "emb_cosine_topk": _q_emb_cosine_topk,
         "text_quality": _q_text_quality,
         "sessionization": _q_sessionization,
@@ -1219,6 +1219,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_sample": _q_corpus_sample,
         "simhash_near_dup": _q_simhash_near_dup,
         "ngram_jaccard": _q_ngram_jaccard,
+        "ngram_jaccard_planted": _q_ngram_jaccard_planted,
         "lsh_ann_topk": _q_lsh_ann_topk,
         "h3_tiling": _q_h3_tiling,
         "s2_tiling": _q_s2_tiling,
@@ -1359,6 +1360,16 @@ def _simhash_oracle_sql() -> str:
             GROUP BY a.doc_id, b.doc_id
         ) WHERE hamming <= 3
     """
+
+
+def _marker_sum_sql(markers) -> str:
+    """Stopword-marker count: the length drop of the space-padded text
+    when every ' word ' is removed, in whole markers, summed."""
+    return " + ".join(
+        f"(length(' ' || text || ' ') - length(replace(' ' || text || ' ', "
+        f"' {w} ', ''))) // {len(w) + 2}"
+        for w in markers
+    )
 
 
 def _sql_lit(v) -> str:
@@ -2014,5 +2025,55 @@ def _oracle_sql_computed() -> dict[str, str]:
                 SELECT user_id FROM events WHERE event_type = 'click'
                 GROUP BY user_id HAVING count(*) >= 3
             )
+        """,
+        "lang_id_lib": f"""
+            SELECT doc_id,
+                   CASE WHEN en > es THEN 'en'
+                        WHEN es > en THEN 'es'
+                        ELSE 'und' END AS lang_guess
+            FROM (
+                SELECT doc_id,
+                       {_marker_sum_sql(("the", "and", "of", "is", "to"))} AS en,
+                       {_marker_sum_sql(("de", "la", "el", "que", "los"))} AS es
+                FROM documents
+            )
+        """,
+        "events_windowed": """
+            SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S')
+                       AS window_start,
+                   event_type, count(*) AS cnt
+            FROM events GROUP BY 1, 2
+        """,
+        "ngram_jaccard_planted": """
+            WITH base AS (
+                SELECT doc_id, text FROM documents
+                WHERE doc_id < 150 AND strlen(text) = length(text)
+                UNION ALL
+                SELECT doc_id + 10000000 AS doc_id, text || ' tail' AS text
+                FROM documents
+                WHERE doc_id < 150 AND doc_id % 20 = 0
+                  AND strlen(text) = length(text)
+            ), d AS (
+                SELECT doc_id, string_split(text, ' ') AS w FROM base
+            ), pos AS (
+                SELECT doc_id, w,
+                       unnest(generate_series(1, greatest(len(w) - 2, 1))) AS i
+                FROM d
+            ), g AS (
+                SELECT DISTINCT doc_id, array_to_string(w[i:i+2], ' ') AS gram
+                FROM pos
+            ), sz AS (
+                SELECT doc_id, count(*) AS n FROM g GROUP BY doc_id
+            ), inter AS (
+                SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
+                FROM g a JOIN g b USING (gram)
+                WHERE a.doc_id < b.doc_id
+                GROUP BY 1, 2
+            )
+            SELECT id_a, id_b, n_common, sa.n + sb.n - n_common AS n_union
+            FROM inter
+            JOIN sz sa ON sa.doc_id = id_a
+            JOIN sz sb ON sb.doc_id = id_b
+            WHERE n_common / (sa.n + sb.n - n_common) >= 0.5
         """,
     }

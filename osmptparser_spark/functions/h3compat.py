@@ -290,7 +290,7 @@ def apply_base_cell_rotations(
     :func:`rotate_digits_pent60_ccw`; hexagon base cells use plain ccw
     rotations. (Round 6: previously the fix ran after plain rotations —
     the ADVICE r5 pentagon-order divergence; pinned by
-    tests/test_round6.py::test_pentagon_rotation_order.)"""
+    tests/test_h3compat.py::test_pentagon_rotation_order.)"""
     if pent:
         if leading_nonzero_digit(digits) == 1:
             digits = rotate_digits_60(digits, ccw=not cw_offset_face)
@@ -333,13 +333,6 @@ def load_tables(path: str | None = None):
         raise ValueError("H3 tables JSON has wrong cardinalities")
     _tables = t
     return t
-
-
-def tables_available() -> bool:
-    if _tables is not None:
-        return True
-    path = os.environ.get("H3_TABLES_JSON")
-    return bool(path and os.path.exists(path))
 
 
 def _geo_azimuth(lat1, lon1, lat2, lon2) -> float:

@@ -8,7 +8,6 @@ inside an Arrow batch.
 
 from __future__ import annotations
 
-import zlib
 from typing import Iterator
 
 import numpy as np
@@ -27,7 +26,7 @@ def _marker_count(text: Column, word: str) -> Column:
     padded = F.concat(F.lit(" "), text, F.lit(" "))
     token = f" {word} "
     return (
-        (F.length(padded) - F.length(F.regexp_replace(padded, F.lit(token), F.lit(""))))
+        (F.length(padded) - F.length(F.replace(padded, F.lit(token), F.lit(""))))
         / len(token)
     ).cast("long")
 
@@ -53,17 +52,6 @@ def token_count_ws(text: Column) -> Column:
     t = F.trim(text)
     return F.when(F.length(t) == 0, F.lit(0)).otherwise(
         F.size(F.split(t, r"\s+"))
-    ).cast("long")
-
-
-def token_count_bpe_ish(text: Column) -> Column:
-    """BPE-ish proxy: word pieces + digits + punctuation as separate
-    tokens (regex splits on transitions)."""
-    return F.size(
-        F.filter(
-            F.split(text, r"(?=[^A-Za-z0-9])|(?<=[^A-Za-z0-9])"),
-            lambda x: (F.length(F.trim(x)) > 0),
-        )
     ).cast("long")
 
 
@@ -94,19 +82,6 @@ def quality_score(text: Column) -> Column:
     word_ok = F.when((mwl >= 2.0) & (mwl <= 12.0), 1.0).otherwise(0.0)
     punct_ok = F.when(punct_ratio(text) <= 0.2, 1.0).otherwise(0.0)
     return (len_ok + stop_ok + word_ok + punct_ok) / 4.0
-
-
-def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    t = F.col(text_col)
-    return (
-        df.withColumn("n_chars_calc", F.length(t).cast("long"))
-        .withColumn("n_tokens_ws", token_count_ws(t))
-        .withColumn("n_tokens_bpe", token_count_bpe_ish(t))
-        .withColumn("punct_ratio", punct_ratio(t))
-        .withColumn("stopword_ratio", stopword_ratio(t))
-        .withColumn("lang_guess", lang_id(t))
-        .withColumn("quality", quality_score(t))
-    )
 
 
 def fingerprint_df(

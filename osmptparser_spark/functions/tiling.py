@@ -311,35 +311,3 @@ def with_cells(
         .withColumn(s2_col, F.col("_c2.s2"))
         .drop("_c2")
     )
-
-
-def tile_points(
-    points: DataFrame,
-    id_col: str = "id",
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    resolutions=(7, 8, 9, 10, 11),
-    s2_level: int = 16,
-) -> DataFrame:
-    """Multi-resolution tiles table (FIXTURES.md §1): one row per
-    (point, h3_res) with both cell systems. Built with a single stacked
-    select per res + union — the encode UDFs run once per res over
-    Arrow batches; no shuffle."""
-    parts = []
-    for res in resolutions:
-        parts.append(
-            points.select(
-                F.col(id_col).alias("entity_id"),
-                F.col(lat_col).alias("lat"),
-                F.col(lon_col).alias("lon"),
-                F.lit(res).cast("tinyint").alias("h3_res"),
-                h3_encode_udf(res)(F.col(lat_col), F.col(lon_col)).alias("h3_cell"),
-                s2_encode_udf(s2_level)(F.col(lat_col), F.col(lon_col)).alias(
-                    "s2_cell"
-                ),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out

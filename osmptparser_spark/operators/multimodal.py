@@ -20,7 +20,6 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 MEDIA_DDL = (
     "media_id BIGINT, kind STRING, payload BINARY, "
@@ -90,25 +89,6 @@ def decode_image_features(
             )
 
     return media.mapInPandas(gen, IMAGE_FEATURES_DDL)
-
-
-def frame_sample(
-    media: DataFrame,
-    every_n: int = 2,
-) -> DataFrame:
-    """Video frame sampling plumbing: emits (media_id, frame_idx) rows
-    for frames 0, every_n, 2*every_n, ... of meta.n_frames — the explode
-    that precedes a per-frame decode. Pure Catalyst, no Python."""
-    return media.select(
-        "media_id",
-        F.explode(
-            F.sequence(
-                F.lit(0),
-                F.greatest(F.col("meta.n_frames") - 1, F.lit(0)),
-                F.lit(every_n),
-            )
-        ).alias("frame_idx"),
-    )
 
 
 def synthesize_media(spark, n: int = 64) -> DataFrame:

@@ -1,11 +1,12 @@
-"""Spatial join operators (W5/W6/W7/W8): cell equi-joins with skew
-salting, within-distance joins, kNN, point-in-polygon, raster<->vector.
+"""Spatial join operators (W6/W7/W8): within-distance joins, kNN,
+point-in-polygon, raster<->vector.
 
 Strategy at 100 TB: every spatial predicate is reduced to an equi-join
 on H3X cell ids (candidate generation), then refined with an exact
 JVM-side haversine / a vectorized ray-cast. Each join has one plan;
-skewed cells (megacities) are salted so one cell's pairs spread over N
-reducers; AQE skew-join splitting backs this up for moderate skew.
+the point-in-polygon refine is salted so a hot polygon's candidates
+spread over several tasks; AQE skew-join splitting absorbs moderate
+cell skew in the candidate joins.
 """
 
 from __future__ import annotations
@@ -39,32 +40,6 @@ def _with_cell(df: DataFrame, res: int, lat: str, lon: str, out: str) -> DataFra
         out,
         F.coalesce(h3_encode_udf(res)(F.col(lat), F.col(lon)), F.lit(-1)),
     )
-
-
-def salted_cell_join(
-    left: DataFrame,
-    right: DataFrame,
-    res: int = 9,
-    salt: int = 8,
-    left_cols=("lat", "lon"),
-    right_cols=("lat", "lon"),
-) -> DataFrame:
-    """W5: co-bucket both sides at ``res`` and equi-join on (cell, salt).
-    Candidates only — callers refine with an exact predicate.
-
-    Skew-proof: replicate the RIGHT side ``salt`` times with
-    salt ids 0..salt-1 and give each LEFT row one deterministic salt, so
-    a megacity cell's candidate pairs spread over ``salt`` reducers.
-    Exactly one (cell, salt) match per true pair -> no duplicates."""
-    l = _with_cell(left, res, *left_cols, out="_cell").withColumn(
-        "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in left.columns]), F.lit(salt))
-    )
-    r = (
-        _with_cell(right, res, *right_cols, out="_cell")
-        .withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
-        .withColumn("_salt", F.col("_salt").cast("bigint"))
-    )
-    return l.join(r, ["_cell", "_salt"]).drop("_salt")
 
 
 def within_distance_join(

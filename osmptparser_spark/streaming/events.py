@@ -5,9 +5,9 @@ event_type, value, props).
 The reference has no streaming (SURVEY.md §2.2); this module exists so
 the engine covers the streaming-shaped workloads a web-scale pipeline
 needs: ``readStream -> withWatermark -> window agg -> writeStream``.
-The same aggregation logic runs in batch (``events_hourly`` in
-__spark_entry__) so correctness is oracle-checked there; streaming
-tests verify the incremental plan produces identical results.
+``windowed_counts`` runs in batch as the ``events_windowed`` query in
+__spark_entry__, so its window starts and counts are oracle-checked there;
+streaming tests verify the incremental plan produces identical results.
 """
 
 from __future__ import annotations

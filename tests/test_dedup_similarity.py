@@ -390,12 +390,84 @@ class TestSimilarity:
         for r in rows:
             assert (r.vec_id, r.vec_id + 1_000_000) in found
 
+    def test_cosine_kernel_matches_hof_reference(self, spark):
+        """The Arrow cosine kernel must rank identically to the JVM
+        higher-order-function formulation it replaced (kept here as the
+        reference), on adversarially close vectors."""
+        from pyspark.sql.window import Window
+
+        from osmptparser_spark.operators.similarity import cosine_topk_bruteforce
+
+        rng = np.random.default_rng(11)
+        base = rng.normal(size=8).astype(np.float32)
+        rows = []
+        for i in range(30):
+            v = base + rng.normal(scale=1e-3, size=8).astype(np.float32)
+            rows.append((i, [float(x) for x in v]))
+        df = spark.createDataFrame(rows, "vec_id BIGINT, embedding ARRAY<FLOAT>")
+        q = df.filter(F.col("vec_id") < 5).select(
+            F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
+        )
+        c = df.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cv"))
+        dot = F.aggregate(
+            F.zip_with("qv", "cv", lambda a, b: a * b), F.lit(0.0), lambda s, x: s + x
+        )
+        norm = lambda col: F.sqrt(  # noqa: E731
+            F.aggregate(col, F.lit(0.0), lambda s, x: s + x * x)
+        )
+        w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("cid"))
+        hof = (
+            q.crossJoin(c)
+            .filter(F.col("qid") != F.col("cid"))
+            .withColumn("cos", dot / (norm(F.col("qv")) * norm(F.col("cv"))))
+            .withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= 3)
+            .select("qid", "cid", "rank", "cos")
+        )
+        want = {(r.qid, r.cid, r.rank): r.cos for r in hof.collect()}
+        got = {
+            (r.qid, r.cid, r.rank): r.cos_sim
+            for r in cosine_topk_bruteforce(df.filter(F.col("vec_id") < 5), df).collect()
+        }
+        assert sorted(got) == sorted(want) and len(want) == 15
+        for key, cos in want.items():
+            assert got[key] == pytest.approx(cos, rel=1e-12, abs=1e-12)
+
+    def test_bruteforce_broadcasts_queries_not_candidates(self, spark, embs):
+        # the candidate table is the unbounded side: the only broadcast
+        # in the plan carries the query vectors (qid/qv), never cid/cv
+        import re
+
+        from osmptparser_spark.operators.similarity import cosine_topk_bruteforce
+
+        out = cosine_topk_bruteforce(embs.filter(F.col("vec_id") < 10), embs, k=3)
+        plan = spark._jvm.PythonSQLUtils.explainString(
+            out._jdf.queryExecution(), "formatted"
+        )
+        inputs = re.findall(
+            r"\(\d+\) BroadcastExchange\nInput \[\d+\]: (\[[^\]]*\])", plan
+        )
+        assert inputs, plan
+        for cols in inputs:
+            assert "qv" in cols and "cv" not in cols and "cid" not in cols, cols
+
 
 class TestTextStats:
     def test_stats_and_oracle(self, spark, docs):
-        from osmptparser_spark.functions.text import with_text_stats
+        from osmptparser_spark.functions.text import (
+            lang_id,
+            quality_score,
+            token_count_ws,
+        )
 
-        df = with_text_stats(docs.limit(50))
+        t = F.col("text")
+        df = docs.limit(50).select(
+            "text",
+            F.length(t).cast("long").alias("n_chars_calc"),
+            token_count_ws(t).alias("n_tokens_ws"),
+            quality_score(t).alias("quality"),
+            lang_id(t).alias("lang_guess"),
+        )
         for r in df.collect():
             toks = r.text.split()
             assert r.n_tokens_ws == len(toks)

@@ -1,9 +1,11 @@
 """Replicates the driver's correctness gate locally: run every
 ``queries()`` entry on Spark and its ``oracle_sql()`` twin on DuckDB at
-sf0.01, compare row counts and order-insensitive values exactly."""
+sf0.01, compare row counts and order-insensitive values exactly; and
+check that every entry outside the relational substrate runs library
+code, so the oracle verifies what ships."""
 
-import math
-import os
+import ast
+import inspect
 
 import duckdb
 import pytest
@@ -23,6 +25,28 @@ TABLES = [
     "documents",
     "embeddings",
 ]
+
+#: Entries that check a relational shape built from Spark built-ins
+#: (filters, joins, aggregates, windows) rather than a library function.
+#: f1 and w7 have library-backed twins: x5_preset_filter and knn_geo.
+#: COVERAGE.md labels the same set.
+RELATIONAL_SUBSTRATE = frozenset(
+    {
+        "f1_tag_filter",
+        "f6_point_lookup",
+        "j1_semi_join",
+        "j2_anti_join",
+        "j3_order_preserving_regroup",
+        "a2_distinct_union",
+        "a3_group_agg",
+        "a4_rollup",
+        "x1_topk_window",
+        "w5_cell_join",
+        "w7_knn_topk",
+        "text_token_count",
+        "events_hourly",
+    }
+)
 
 
 @pytest.fixture(scope="module")
@@ -69,6 +93,48 @@ def test_query_matches_oracle(spark, duck, name):
     assert len(got) == len(want), f"{name}: row count {len(got)} != {len(want)}"
     first_diff = next(((a, b) for a, b in zip(got, want) if a != b), None)
     assert got == want, f"{name}: values differ (first diff: {first_diff})"
+
+
+def _imports_library(node) -> bool:
+    for n in ast.walk(node):
+        if isinstance(n, ast.ImportFrom) and (n.module or "").startswith(
+            "osmptparser_spark"
+        ):
+            return True
+        if isinstance(n, ast.Import) and any(
+            a.name.startswith("osmptparser_spark") for a in n.names
+        ):
+            return True
+    return False
+
+
+def test_every_query_reaches_the_library():
+    """An entry reaches ``osmptparser_spark`` when its body, or a
+    ``_``-helper it calls (transitively), imports from it. Exactly the
+    relational-substrate entries do not."""
+    tree = ast.parse(inspect.getsource(entry_mod))
+    funcs = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
+
+    def reaches(name, seen):
+        if name in seen:
+            return False
+        seen.add(name)
+        fn = funcs[name]
+        if _imports_library(fn):
+            return True
+        helpers = {
+            n.id
+            for n in ast.walk(fn)
+            if isinstance(n, ast.Name) and n.id.startswith("_") and n.id in funcs
+        }
+        return any(reaches(h, seen) for h in helpers)
+
+    raw = {
+        name
+        for name, fn in entry_mod.queries().items()
+        if not reaches(fn.__name__, set())
+    }
+    assert raw == RELATIONAL_SUBSTRATE
 
 
 def test_entry_smoke(spark):

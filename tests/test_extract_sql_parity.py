@@ -60,3 +60,23 @@ def test_pandas_path_handles_pipes_in_way_tags(spark):
         assert dict(row.tags) == {"note": "x|y"}
         assert dict(row.info) == {"k": "1"}
         assert list(row.refs) == [1, 2]
+
+
+def test_extraction_empty_map_fast_path(spark):
+    # the SQL path's `{}` fast path on a mixed empty/non-empty tag corpus
+    nodes = [
+        {"id": 1, "lat": 1.0, "lon": 2.0, "tags": {}},
+        {"id": 2, "lat": 3.0, "lon": 4.0, "tags": {"name": "a|b", "x": "{}"}},
+        {"id": 3, "lat": 5.0, "lon": 6.0, "tags": {"ünï": "çøde"}},
+    ]
+    pages = P.pages_df(spark, P.entities_to_pages(nodes, [], [], 2))
+    got = sorted(
+        (r["id"], r["lat"], r["lon"], dict(r["tags"]))
+        for r in P.extract_nodes_sql(pages).collect()
+    )
+    want = sorted(
+        (r["id"], r["lat"], r["lon"], dict(r["tags"]))
+        for r in O.extract_nodes(pages).collect()
+    )
+    assert got == want
+    assert got[0][3] == {} and got[1][3] == {"name": "a|b", "x": "{}"}

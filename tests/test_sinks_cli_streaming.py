@@ -130,18 +130,6 @@ class TestMultimodal:
         h, w, arr = real_decode_stub(encode_png(img))
         assert (h, w) == (4, 4) and float(arr.mean()) == 9.0
 
-    def test_frame_sample(self, spark):
-        from osmptparser_spark.operators.multimodal import frame_sample, synthesize_media
-
-        media = synthesize_media(spark, 12)
-        rows = frame_sample(media, every_n=3).collect()
-        byid = {}
-        for r in rows:
-            byid.setdefault(r.media_id, []).append(r.frame_idx)
-        meta = {r.media_id: r.meta.n_frames for r in media.collect()}
-        for mid, frames in byid.items():
-            assert frames == list(range(0, meta[mid], 3))
-
 
 class TestStreaming:
     def test_streaming_matches_batch(self, spark, tmp_path):

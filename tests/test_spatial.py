@@ -243,38 +243,6 @@ class TestWithinDistance:
         assert got8 == want
 
 
-class TestSaltedJoin:
-    def test_salted_equals_plain_on_skewed_data(self, spark):
-        # megacity: one hot location with 100x density
-        hot_lat, hot_lon = -2.19, -79.89
-        lats = np.concatenate([np.full(2000, hot_lat) + RNG.normal(0, 1e-4, 2000), Q_LAT])
-        lons = np.concatenate([np.full(2000, hot_lon) + RNG.normal(0, 1e-4, 2000), Q_LON])
-        r_lats = np.append(S_LAT, hot_lat)
-        r_lons = np.append(S_LON, hot_lon)
-        r_ids = list(range(len(S_LAT))) + [10_000]
-        left = spark.createDataFrame(
-            [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(lats, lons))],
-            "id BIGINT, lat DOUBLE, lon DOUBLE",
-        )
-        right = spark.createDataFrame(
-            [(i, float(a), float(b)) for i, a, b in zip(r_ids, r_lats, r_lons)],
-            "rid BIGINT, lat DOUBLE, lon DOUBLE",
-        )
-        salted = sp.salted_cell_join(left, right, res=7, salt=8)
-        got = [(r.id, r.rid) for r in salted.select("id", "rid").collect()]
-        # driver-side reference: every pair whose res-7 home cells are equal
-        l_cells = h3x.latlng_to_cell(lats, lons, 7)
-        r_cells = h3x.latlng_to_cell(r_lats, r_lons, 7)
-        by_cell = {}
-        for rid, c in zip(r_ids, r_cells):
-            by_cell.setdefault(int(c), []).append(rid)
-        want = {
-            (i, rid) for i, c in enumerate(l_cells) for rid in by_cell.get(int(c), [])
-        }
-        assert len(got) == len(set(got))  # exactly one (cell, salt) match per pair
-        assert set(got) == want and len(want) > 2000  # hot cell pairs present
-
-
 class TestPointInPolygon:
     def test_cells_strategy_no_broadcast_nested_loop(self, spark, queries_df):
         # the scale contract: candidate generation is an equi-join on

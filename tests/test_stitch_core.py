@@ -1,8 +1,13 @@
 """Unit tests for the way-stitching core: the status cascade 0/101/102/501,
 the sort-identity + edgedistance==-1 quirks, junction-node dedup asymmetry,
-and area-mode closure semantics (FIXTURES.md §4 status cascade cases)."""
+and area-mode closure semantics (FIXTURES.md §4 status cascade cases);
+plus the partitioned stitch's whole-frame ``_stitch_many`` against the
+per-relation ``flatten`` it must equal."""
 
 import math
+
+import numpy as np
+import pandas as pd
 
 from osmptparser_spark.operators import stitch_core as sc
 
@@ -225,3 +230,46 @@ class TestAreaMode:
         assert st == sc.STATUS_OK  # last ring masks the 102
         ways, st = close_all([ring501, ring0])
         assert st == sc.STATUS_BROKEN and ways[0] == []
+
+
+def test_stitch_many_matches_per_group():
+    from osmptparser_spark.operators.stitch import _stitch_many
+
+    rng = np.random.default_rng(3)
+    rows = []
+    for rel in range(7):
+        for wp in range(int(rng.integers(1, 4))):
+            for np_ in range(int(rng.integers(2, 6))):
+                rows.append(
+                    {
+                        "rel_id": rel,
+                        "way_pos": wp,
+                        "node_pos": np_,
+                        "node_id": int(rng.integers(0, 10_000)),
+                        "lat": float(rng.uniform(-1, 1)),
+                        "lon": float(rng.uniform(-80, -79)),
+                    }
+                )
+    pdf = pd.DataFrame(rows).sample(frac=1.0, random_state=5)  # scramble
+    got = _stitch_many(pdf, 150.0, False).sort_values("rel_id")
+
+    ordered = pdf.iloc[np.lexsort((pdf["node_pos"], pdf["way_pos"], pdf["rel_id"]))]
+    want = []
+    for rel, g in ordered.groupby("rel_id", sort=True):
+        ways = [
+            list(zip(w["node_id"], w["lat"], w["lon"]))
+            for _, w in g.groupby("way_pos", sort=True)
+        ]
+        geom, (code, detail) = sc.flatten(ways, 150.0, False)
+        want.append(
+            (
+                rel,
+                [[{"lon": n[2], "lat": n[1]} for n in seg] for seg in geom],
+                [[n[0] for n in seg] for seg in geom],
+                code,
+                detail,
+            )
+        )
+    assert list(got["rel_id"]) == [w[0] for w in want]
+    for i, col in enumerate(["geometry", "node_seq", "status_code", "status_detail"], 1):
+        assert list(got[col]) == [w[i] for w in want], col

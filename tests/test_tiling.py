@@ -100,7 +100,7 @@ class TestH3X:
 
 class TestSparkTiling:
     def test_with_cells_and_tiles(self, spark):
-        from osmptparser_spark.functions.tiling import tile_points, with_cells
+        from osmptparser_spark.functions.tiling import with_cells
 
         pts = spark.createDataFrame(
             [(i, -2.0 + i * 0.001, -79.5 + i * 0.001) for i in range(100)],
@@ -114,10 +114,6 @@ class TestSparkTiling:
         lons = np.array([r.lon for r in rows])
         assert [r.h3_cell for r in rows] == h3x.latlng_to_cell(lats, lons, 9).tolist()
         assert [r.s2_cell for r in rows] == s2x.cell_id(lats, lons, 16).tolist()
-
-        tiles = tile_points(pts, resolutions=(7, 9))
-        assert tiles.count() == 200
-        assert tiles.select("h3_res").distinct().count() == 2
 
     def test_k_ring_udf(self, spark):
         from osmptparser_spark.functions.tiling import h3_encode_udf, k_ring_udf
