@@ -19,11 +19,9 @@ MapReduce and Beyond", SoCC'14) on DataFrames:
   independent of graph diameter (a plain min-label-propagation loop
   is O(diameter) rounds, which a 10^6-long chain turns into 10^6
   shuffles);
-* per-round lineage is truncated (reliable ``checkpoint`` when the
-  session has a checkpoint dir — REQUIRED under the ``cluster``
-  profile's dynamic allocation, where localCheckpoint blocks die with
-  reclaimed executors; ``localCheckpoint`` otherwise) so the plan
-  does not grow with iteration count;
+* per-round lineage is truncated (``session.materialize``: a reliable
+  ``checkpoint`` under a checkpoint dir, ``localCheckpoint``
+  otherwise) so the plan does not grow with iteration count;
 * skew note: at convergence a cluster's root has degree = cluster
   size, so the join back on ``u`` is skewed exactly on popular roots.
   AQE's skew-join splitting (on by default in this engine's profiles)
@@ -41,6 +39,8 @@ import time
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+from ..session import materialize
 
 # How long a round waits for its observed fingerprint after the
 # checkpoint job returns (the metrics arrive through the listener bus,
@@ -102,13 +102,6 @@ def _observed(obs: Observation, timeout_s: float) -> dict | None:
     return obs.get
 
 
-def _truncate(df: DataFrame) -> DataFrame:
-    spark = df.sparkSession
-    if spark.sparkContext.getCheckpointDir() is not None:
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
@@ -139,7 +132,7 @@ def connected_components(
         # localCheckpoint and reliable checkpoint. If the metrics do not
         # arrive, the checkpointed edge set is aggregated instead.
         obs = Observation()
-        e = _truncate(e.observe(obs, *_fingerprint_exprs()))
+        e = materialize(e.observe(obs, *_fingerprint_exprs()))
         m = _observed(obs, _OBSERVATION_WAIT_S) or e.agg(*_fingerprint_exprs()).first()
         n, h = m["n"], m["h"]
         # The fingerprint is only a fast PRE-check: a collision between

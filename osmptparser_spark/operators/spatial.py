@@ -11,6 +11,8 @@ cell skew in the candidate joins.
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
 
@@ -26,6 +28,7 @@ from ..functions.tiling import (
     k_ring_udf,
     polygon_cover_cells_batch,
 )
+from ..session import materialize
 
 
 def _with_cell(df: DataFrame, res: int, lat: str, lon: str, out: str) -> DataFrame:
@@ -93,33 +96,24 @@ def within_distance_join(
     )
 
 
-def knn_join(
-    queries: DataFrame,
-    candidates: DataFrame,
-    k: int = 3,
-    res: int = 8,
-    ring: int = 2,
-    query_id: str = "id",
-    cand_id: str = "id",
-    exact_fallback: bool = True,
-    rescue_max_queries: int | None = None,
-) -> DataFrame:
-    """W7: k nearest candidates per query.
+#: Byte budget for the pending-query set the brute pass broadcasts
+#: (rows x row width); above it ``knn_join`` raises instead of shipping
+#: the set to every executor.
+_BRUTE_BROADCAST_MAX_BYTES = 1 << 30
 
-    Scale path: k-ring candidate generation -> cell equi-join -> exact
-    haversine -> row_number window top-k. Queries whose result is not
-    provably complete escalate through progressively wider CELL joins
-    (never all-pairs): (2) a 2x ring at res-1, (3) ``within_distance_join``
-    at res-2 over a ~4x radius (face-safe multiface cover). Only the
-    remainder of THAT — queries with fewer than k candidates inside a
-    multi-hundred-km disk, structurally rare at any density — hits the
-    brute-force pass, and the brute pass broadcasts the PENDING QUERY
-    side (bounded by the rescue remainder), never the candidate table,
-    with a per-partition partial top-k so the shuffle carries at most
-    k rows per (query, partition). Set ``rescue_max_queries`` to
-    assert the remainder is small before the brute pass runs (adds one
-    count job), or exact_fallback=False to skip rescue entirely.
-    """
+
+def _top_k(pairs: DataFrame, k: int) -> DataFrame:
+    """The k nearest rows per query, ties broken by ``cand_id``."""
+    w = Window.partitionBy("query_id").orderBy(F.col("dist_m"), F.col("cand_id"))
+    return pairs.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _ring_topk(
+    queries: DataFrame, candidates: DataFrame, k: int, res: int, ring: int,
+    query_id: str, cand_id: str,
+) -> DataFrame:
+    """k-ring candidate generation -> cell equi-join -> exact
+    haversine -> top-k. Never leaves the query's icosahedron face."""
     q = (
         _with_cell(queries, res, "lat", "lon", "_cell0")
         .withColumn("_ring", k_ring_udf(ring)(F.col("_cell0")))
@@ -144,108 +138,107 @@ def knn_join(
         .dropDuplicates(["query_id", "cand_id"])
         .withColumn("dist_m", dist)
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("dist_m"), F.col("cand_id"))
-    topk = (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "dist_m", "rank")
-    )
+    return _top_k(pairs, k).select("query_id", "cand_id", "dist_m", "rank")
+
+
+def knn_join(
+    queries: DataFrame,
+    candidates: DataFrame,
+    k: int = 3,
+    res: int = 8,
+    ring: int = 2,
+    query_id: str = "id",
+    cand_id: str = "id",
+    exact_fallback: bool = True,
+) -> DataFrame:
+    """W7: k nearest candidates per query, as
+    ``(query_id, cand_id, dist_m, rank)``, ties broken by ``cand_id``.
+
+    ``exact_fallback=False`` returns level 1 below alone: a lazy k-ring
+    top-k that can miss neighbours beyond the ring or across a face edge.
+
+    The exact path is a cascade of ever wider CELL joins (never
+    all-pairs), each over the queries still pending:
+
+    1. k-ring at ``(res, ring)``;
+    2. k-ring at ``(res-1, 2*ring)``;
+    3. ``within_distance_join``'s covering sweep at ``res-2``, radius
+       ``r3 = 4 * ring_guaranteed_m(2*ring, res-1)``.
+
+    A query's level top-k is final iff it has ``k`` rows and its k-th
+    distance is within the level's guaranteed radius, capped on the
+    k-ring levels at the query's distance to its icosahedron face edge
+    (a k-ring never leaves its face; the sweep's multi-face cover does).
+    The cascade stops once no query is pending. The rare remainder of
+    level 3 goes to ``_brute_knn``, which broadcasts the pending-query
+    set, never the candidate table, and raises ``ValueError`` if that
+    set's bytes (rows x row width) exceed ``_BRUTE_BROADCAST_MAX_BYTES``.
+
+    The exact path runs eagerly: the query set, each level's top-k and
+    each pending set are materialized once (``session.materialize``), so
+    the call starts Spark jobs and plans no level for an empty pending
+    set. It returns the union of each level's final rows.
+    """
     if not exact_fallback:
-        return topk
-    # EXACTNESS GUARANTEE: a query's ring result is provably the true
-    # top-k iff it found >= k candidates AND its k-th distance lies
-    # within the ring's guaranteed coverage radius AND within the
-    # query's distance to its face's Voronoi boundary (k-rings never
-    # cross icosahedron faces, so past that distance a true neighbor
-    # could live on the adjacent face unseen — the round-1 check was
-    # intra-face-only). Everything else escalates: first a 2x ring at
-    # the coarser res (still a cell join — at web scale sparse regions
-    # and face-edge queries are rare), then the covering sweep, then
-    # brute force.
+        return _ring_topk(queries, candidates, k, res, ring, query_id, cand_id)
     from ..functions.h3x import ring_guaranteed_m
 
-    q_edge = queries.select(
-        F.col(query_id).alias("query_id"),
-        face_edge_m_udf()(F.col("lat"), F.col("lon")).alias("_edge_m"),
+    res2 = max(res - 1, 0)
+    # (res, ring, guaranteed radius); ring None is the covering sweep
+    levels = (
+        (res, ring, ring_guaranteed_m(ring, res)),
+        (res2, 2 * ring, ring_guaranteed_m(2 * ring, res2)),
+        (max(res - 2, 0), None, 4.0 * ring_guaranteed_m(2 * ring, res2)),
     )
-
-    def _complete(tk: DataFrame, guaranteed: float) -> DataFrame:
-        return (
-            tk.groupBy("query_id")
-            .agg(F.count("*").alias("_n"), F.max("dist_m").alias("_d"))
-            .join(q_edge, "query_id")
-            .filter(
-                (F.col("_n") >= k)
-                & (F.col("_d") <= F.least(F.lit(guaranteed), F.col("_edge_m")))
+    edge_m = face_edge_m_udf()(F.col("lat"), F.col("lon")).alias("_edge_m")
+    pending = materialize(
+        queries.select(F.col(query_id).alias("query_id"), "lat", "lon", edge_m)
+    )
+    final = []
+    for lvl_res, lvl_ring, radius in levels:
+        if lvl_ring is None:
+            pairs = within_distance_join(
+                pending, candidates, radius, lvl_res,
+                point_id="query_id", stop_id=cand_id,
+            ).select(
+                F.col("point_id").alias("query_id"),
+                F.col("stop_id").alias("cand_id"),
+                "dist_m",
             )
-            .select("query_id")
+            topk, limit = _top_k(pairs, k), F.lit(radius)
+        else:
+            topk = _ring_topk(
+                pending, candidates, k, lvl_res, lvl_ring, "query_id", cand_id
+            )
+            limit = F.least(F.lit(radius), F.col("_edge_m"))
+        topk = materialize(topk)
+        stats = topk.groupBy("query_id").agg(
+            F.count("*").alias("_n"), F.max("dist_m").alias("_d")
         )
-
-    done1 = _complete(topk, ring_guaranteed_m(ring, res))
-    pending1 = queries.select(
-        F.col(query_id).alias("query_id"), "lat", "lon"
-    ).join(done1, "query_id", "left_anti")
-    wide = knn_join(
-        pending1,
-        candidates,
-        k=k,
-        res=max(res - 1, 0),
-        ring=ring * 2,
-        query_id="query_id",
-        cand_id=cand_id,
-        exact_fallback=False,
-    )
-    done2 = _complete(wide, ring_guaranteed_m(ring * 2, max(res - 1, 0)))
-    pending2 = pending1.join(done2, "query_id", "left_anti")
-
-    # Third escalation: face-safe multiface covering sweep — the
-    # within-distance join at a coarser res over a ~4x radius. Because
-    # the cover crosses icosahedron faces (unlike k-rings), completeness
-    # needs NO face-edge cap: every candidate within r3 provably
-    # appears, so >= k of them means the top k are the exact top k.
-    r3 = 4.0 * ring_guaranteed_m(ring * 2, max(res - 1, 0))
-    topk3 = (
-        within_distance_join(
-            pending2, candidates, r3, max(res - 2, 0),
-            point_id="query_id", stop_id=cand_id,
+        # a query with no candidate at this level has null stats: pending
+        complete = F.coalesce(
+            (F.col("_n") >= k) & (F.col("_d") <= limit), F.lit(False)
         )
-        .select(
-            F.col("point_id").alias("query_id"),
-            F.col("stop_id").alias("cand_id"),
-            "dist_m",
+        pending = materialize(
+            pending.join(stats, "query_id", "left").filter(~complete).drop("_n", "_d")
         )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-    done3 = (
-        topk3.groupBy("query_id")
-        .agg(F.count("*").alias("_n"))
-        .filter(F.col("_n") >= k)
-        .select("query_id")
-    )
-    short = (
-        pending2.join(done3, "query_id", "left_anti")
-        .select(
-            "query_id",
-            F.col("lat").alias("q_lat"),
-            F.col("lon").alias("q_lon"),
+        final.append(topk.join(pending, "query_id", "left_anti"))
+        if pending.isEmpty():
+            break
+    else:
+        n_pending = pending.count()
+        short = pending.select(
+            "query_id", F.col("lat").alias("q_lat"), F.col("lon").alias("q_lon")
         )
-    )
-    if rescue_max_queries is not None:
-        n_short = short.count()
-        if n_short > rescue_max_queries:
+        n_bytes = n_pending * short._jdf.schema().defaultSize()
+        if n_bytes > _BRUTE_BROADCAST_MAX_BYTES:
             raise ValueError(
-                f"kNN brute-force rescue remainder has {n_short} queries "
-                f"(> rescue_max_queries={rescue_max_queries}); widen "
-                "ring/res or pass exact_fallback=False"
+                f"kNN brute-force pass would broadcast {n_pending} pending "
+                f"queries ({n_bytes} bytes > {_BRUTE_BROADCAST_MAX_BYTES}); "
+                "widen ring/res or pass exact_fallback=False"
             )
-    brute = _brute_knn(short, candidates, k, cand_id)
-    return (
-        topk.join(done1, "query_id", "left_semi")
-        .unionByName(wide.join(done2, "query_id", "left_semi"))
-        .unionByName(topk3.join(done3, "query_id", "left_semi"))
-        .unionByName(brute)
-    )
+        final.append(_brute_knn(short, candidates, k, cand_id))
+    return functools.reduce(DataFrame.unionByName, final)
 
 
 def _brute_knn(

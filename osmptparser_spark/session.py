@@ -25,7 +25,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CONFS = {
     "spark.sql.adaptive.enabled": "true",
@@ -151,3 +151,14 @@ def local_df(spark: SparkSession, rows, ddl: str, slices: int | None = None):
         par = spark.sparkContext.defaultParallelism
         slices = max(1, min(par, (len(rows) + 63) // 64))
     return spark.createDataFrame(spark.sparkContext.parallelize(rows, slices), ddl)
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """``df`` computed once, eagerly, with its lineage truncated: a
+    reliable ``checkpoint`` when the session has a checkpoint dir
+    (REQUIRED under the ``cluster`` profile's dynamic allocation, where
+    localCheckpoint blocks die with reclaimed executors),
+    ``localCheckpoint`` otherwise."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)

@@ -1,42 +1,11 @@
-"""Round-2 verification: face-edge distances and multi-face encodes,
-partitioned way-area stitch, lineage output validation, PBF compression
-guard. (The cross-face and PIP-salting join tests live in
-test_spatial.py; the hot-bucket cap and vectorized-signature tests in
-test_dedup_similarity.py.)"""
+"""Round-2 verification: partitioned way-area stitch, lineage output
+validation, PBF compression guard. (The face-edge, cross-face and
+PIP-salting tests live in test_spatial.py; the hot-bucket cap and
+vectorized-signature tests in test_dedup_similarity.py.)"""
 
-import numpy as np
 import pytest
 
 from pyspark.sql import functions as F
-
-from osmptparser_spark.functions import h3x
-from tests.test_spatial import _edge_lat
-
-
-# --- face boundaries --------------------------------------------------------
-
-
-def test_face_edge_distance_properties():
-    lat = np.linspace(-80, 80, 500)
-    lon = np.linspace(-170, 170, 500)
-    d = h3x.face_edge_distance_m(lat, lon)
-    assert (d >= 0).all() and np.isfinite(d).all()
-    # near-edge points report small distances
-    el = _edge_lat(18.0)
-    assert h3x.face_edge_distance_m([el], [18.0])[0] < 5_000
-
-
-def test_multiface_covers_cross_face_neighbors():
-    el = _edge_lat(18.0)
-    # a point just on one side of the edge must ALSO encode onto the
-    # face across it when the pad spans the boundary
-    idx, cells = h3x.latlng_to_cells_multiface([el + 0.01], [18.0], 7, 5000.0)
-    bases = set((np.asarray(cells, dtype=np.int64) >> 45) & 0x3FF)
-    faces = {int(b) // 49 for b in bases}
-    assert len(faces) >= 2, f"expected multi-face encodes, got faces {faces}"
-    # far from any edge: exactly one encode
-    idx1, cells1 = h3x.latlng_to_cells_multiface([10.0], [5.0], 7, 5000.0)
-    assert len(cells1) == 1
 
 
 # --- partitioned way-area stitch ---------------------------------------------

@@ -1,5 +1,6 @@
-"""Spatial operators (W5-W8): kNN vs brute-force golden (including each
-escalation level and face-boundary queries), within-distance join vs
+"""Spatial operators (W5-W8): face-edge distances and multi-face
+encodes, kNN vs brute-force golden (including each escalation level and
+face-boundary queries), within-distance join vs
 numpy oracle, salted join vs a driver-side cell-equality reference on a
 skewed fixture, point-in-polygon vs numpy ray-cast oracle (including
 hot-polygon salting), raster/vector round trip."""
@@ -42,6 +43,29 @@ def _edge_lat(lon: float) -> float:
     la = np.linspace(-40.0, 40.0, 4001)
     d = h3x.face_edge_distance_m(la, np.full_like(la, lon))
     return float(la[int(np.argmin(d))])
+
+
+def test_face_edge_distance_properties():
+    lat = np.linspace(-80, 80, 500)
+    lon = np.linspace(-170, 170, 500)
+    d = h3x.face_edge_distance_m(lat, lon)
+    assert (d >= 0).all() and np.isfinite(d).all()
+    # near-edge points report small distances
+    el = _edge_lat(18.0)
+    assert h3x.face_edge_distance_m([el], [18.0])[0] < 5_000
+
+
+def test_multiface_covers_cross_face_neighbors():
+    el = _edge_lat(18.0)
+    # a point just on one side of the edge must ALSO encode onto the
+    # face across it when the pad spans the boundary
+    idx, cells = h3x.latlng_to_cells_multiface([el + 0.01], [18.0], 7, 5000.0)
+    bases = set((np.asarray(cells, dtype=np.int64) >> 45) & 0x3FF)
+    faces = {int(b) // 49 for b in bases}
+    assert len(faces) >= 2, f"expected multi-face encodes, got faces {faces}"
+    # far from any edge: exactly one encode
+    idx1, cells1 = h3x.latlng_to_cells_multiface([10.0], [5.0], 7, 5000.0)
+    assert len(cells1) == 1
 
 
 def brute_knn(k=3):
@@ -126,15 +150,25 @@ class TestKnnRescue:
         # (ring_guaranteed_m(2*ring, res-1) ~2.8 km) but within the
         # covering sweep's r3 (4x that): the sweep, not the brute pass,
         # must resolve it. Query 1 sits in a dense cluster (level 1);
-        # query 2 is ~2,000 km from every candidate (brute pass).
+        # query 2 is ~2,000 km from every candidate (brute pass); query
+        # 3's neighbours lie beyond level 1's guaranteed radius but
+        # within level 2's, so level 2 resolves it before the sweep.
         k, res, ring = 2, 8, 1
+        g1 = h3x.ring_guaranteed_m(ring, res)
         g2 = h3x.ring_guaranteed_m(2 * ring, res - 1)
-        qlat = np.array([-1.2, -1.5, 5.0])
-        qlon = np.array([-79.0, -79.3, -62.0])
-        clat = np.array([-1.2 + 0.06, -1.2, -1.2 - 0.08, -1.5004, -1.4990, -1.5008])
-        clon = np.array([-79.0, -79.0 + 0.07, -79.0, -79.3, -79.3006, -79.3009])
+        qlat = np.array([-1.2, -1.5, 5.0, -0.8])
+        qlon = np.array([-79.0, -79.3, -62.0, -78.8])
+        clat = np.array([
+            -1.2 + 0.06, -1.2, -1.2 - 0.08, -1.5004, -1.4990, -1.5008,
+            -0.8 + 0.0135, -0.8,
+        ])
+        clon = np.array([
+            -79.0, -79.0 + 0.07, -79.0, -79.3, -79.3006, -79.3009,
+            -78.8, -78.8 + 0.018,
+        ])
         d = haversine_np(qlat[:, None], qlon[:, None], clat[None, :], clon[None, :])
         assert (d[0] > g2).all() and np.sort(d[0])[k - 1] < 4.0 * g2
+        assert g1 < np.sort(d[3])[k - 1] < g2
         q_df = spark.createDataFrame(
             [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(qlat, qlon))],
             "id BIGINT, lat DOUBLE, lon DOUBLE",
@@ -150,10 +184,20 @@ class TestKnnRescue:
             brute_inputs.append(short)
             return brute_knn(short, *args, **kwargs)
 
+        sweep_inputs = []
+        sweep = sp.within_distance_join
+
+        def sweep_spy(points, *args, **kwargs):
+            sweep_inputs.append(points)
+            return sweep(points, *args, **kwargs)
+
         monkeypatch.setattr(sp, "_brute_knn", spy)
+        monkeypatch.setattr(sp, "within_distance_join", sweep_spy)
         out = sp.knn_join(q_df, c_df, k=k, res=res, ring=ring)
         (short,) = brute_inputs
         assert {r.query_id for r in short.collect()} == {2}
+        (swept,) = sweep_inputs
+        assert {r.query_id for r in swept.collect()} == {0, 2}
         got = {}
         for r in out.collect():
             got.setdefault(r.query_id, []).append((r.rank, r.cand_id))
@@ -164,7 +208,10 @@ class TestKnnRescue:
         }
         assert got == want
 
-    def test_rescue_max_queries_guard(self, spark):
+    def test_brute_pass_byte_guard(self, spark, monkeypatch):
+        # 30 queries scattered over the globe, 2 candidates: queries
+        # reach the brute pass, whose broadcast of the pending set is
+        # refused once it exceeds the byte budget.
         rng = np.random.default_rng(4)
         q_df = spark.createDataFrame(
             [(i, float(a), float(b)) for i, (a, b) in enumerate(
@@ -174,8 +221,63 @@ class TestKnnRescue:
         c_df = spark.createDataFrame(
             [(0, 0.0, 0.0), (1, 0.1, 0.1)], "id BIGINT, lat DOUBLE, lon DOUBLE"
         )
-        with pytest.raises(ValueError, match="rescue_max_queries"):
-            sp.knn_join(q_df, c_df, k=2, res=8, ring=1, rescue_max_queries=1)
+        monkeypatch.setattr(sp, "_BRUTE_BROADCAST_MAX_BYTES", 0)
+        with pytest.raises(ValueError, match="brute-force pass would broadcast"):
+            sp.knn_join(q_df, c_df, k=2, res=8, ring=1)
+
+    def test_level_one_resolution_skips_later_levels(self, spark, monkeypatch):
+        # a dense 20x20 grid (~220 m pitch): every query's 3 nearest
+        # candidates lie well within level 1's guaranteed radius, so the
+        # cascade stops after level 1: no covering sweep, no brute pass.
+        g = 0.002 * np.arange(20)
+        clat = np.repeat(-1.0 + g, 20)
+        clon = np.tile(-79.0 + g, 20)
+        rng = np.random.default_rng(6)
+        qlat = rng.uniform(-0.99, -0.97, 50)
+        qlon = rng.uniform(-78.99, -78.97, 50)
+        q_df = spark.createDataFrame(
+            [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(qlat, qlon))],
+            "id BIGINT, lat DOUBLE, lon DOUBLE",
+        )
+        c_df = spark.createDataFrame(
+            [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(clat, clon))],
+            "id BIGINT, lat DOUBLE, lon DOUBLE",
+        )
+        called = []
+        sweep, brute = sp.within_distance_join, sp._brute_knn
+
+        def sweep_spy(*args, **kwargs):
+            called.append("within_distance_join")
+            return sweep(*args, **kwargs)
+
+        def brute_spy(*args, **kwargs):
+            called.append("_brute_knn")
+            return brute(*args, **kwargs)
+
+        monkeypatch.setattr(sp, "within_distance_join", sweep_spy)
+        monkeypatch.setattr(sp, "_brute_knn", brute_spy)
+        sc = spark.sparkContext
+        group = "test-knn-level-one"
+        sc.setJobGroup(group, group)
+        try:
+            rows = sp.knn_join(q_df, c_df, k=3, res=8, ring=2).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert called == []
+        # the query set, the level-1 top-k and the pending split take a
+        # few AQE stages each, plus one emptiness check and the collect
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 16
+        d = haversine_np(qlat[:, None], qlon[:, None], clat[None, :], clon[None, :])
+        got = {}
+        for r in rows:
+            got.setdefault(r.query_id, []).append((r.rank, r.cand_id))
+        got = {q: [c for _, c in sorted(v)] for q, v in got.items()}
+        want = {
+            qi: [int(j) for j in np.lexsort((np.arange(len(clat)), d[qi]))[:3]]
+            for qi in range(len(qlat))
+        }
+        assert got == want
 
 
 class TestCrossFaceJoins:
