@@ -861,7 +861,7 @@ def _area_city_entities():
 def _q_w6_pip(spark, sf_dir):
     # W6: ray-cast point-in-polygon against literal polygons, via the
     # scale-safe default plan (polygon cell-cover explode -> shuffle
-    # EQUI-join on cell + bbox residual -> salted numpy refine; no
+    # EQUI-join on cell + bbox residual -> salted JVM ray cast; no
     # broadcast nested loop anywhere). The oracle re-derives
     # containment in SQL (bbox tests for rectangles, half-plane sign
     # tests for the triangle) — a genuinely independent formulation.
@@ -875,8 +875,8 @@ def _q_w6_pip(spark, sf_dir):
     from osmptparser_spark.session import local_df
 
     # local_df(slices=1), not bare createDataFrame: the cells plan reads
-    # the polygon side twice per action (cover mapInPandas + the cogroup
-    # ring side), and a defaultParallelism-sliced 2-row table pays 64
+    # the polygon side twice per action (cover mapInPandas + the refine
+    # join's ring side), and a defaultParallelism-sliced 2-row table pays 64
     # Python task dispatches per run — the bench leg's dominant cost
     # under host contention.
     polys = local_df(

@@ -299,7 +299,7 @@ def main():
         # spatial join: nearest stop-node for a ~10k-point query sample
         # (modulo filter, NOT limit: global limit coalesces to 1 task)
         sample = nodes.filter((F.col("id") % F.lit(max(1, N_ROUTES * 181 // 10_000))) == 0)
-        stops = nodes.sample(0.01, seed=1)
+        stops = nodes.sample(fraction=0.01, seed=1)
         knn = knn_join(sample, stops, k=1, res=8, ring=1, exact_fallback=False)
         knn_agg = knn.agg(F.count("*")).collect()
         nodes.unpersist()
@@ -311,7 +311,7 @@ def main():
     # SPARK_GRAFT_GEO_TRIALS>1 -> min-of-N full runs in this JVM: the
     # sandbox host carries external load, so min-of-trials is the
     # fairest steady-state estimate (used by scaling.py).
-    geo_pipeline(pages.sample(0.05, seed=0))
+    geo_pipeline(pages.sample(fraction=0.05, seed=0))
     trials = int(os.environ.get("SPARK_GRAFT_GEO_TRIALS", "2"))
     runs = []  # (wall, cpu, steal) per trial; report the min-wall trial
     # steal-aware retry: if even the best trial overlapped a hypervisor

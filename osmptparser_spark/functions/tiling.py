@@ -101,7 +101,7 @@ def _grid_inside(lats: np.ndarray, lons: np.ndarray, ry: np.ndarray, rx: np.ndar
             y2[cond] - y1[cond]
         ) + x1[cond]
         xint.sort()
-        # parity of #{xint > lon}  (matches _ray_cast's strict px < xint)
+        # parity of #{xint > lon}  (matches _ray_cast_expr's strict px < xint)
         n_le = np.searchsorted(xint, lons, side="right")
         inside[i] = ((len(xint) - n_le) % 2).astype(bool)
     return inside

@@ -2,11 +2,11 @@
 point-in-polygon, raster<->vector.
 
 Strategy at 100 TB: every spatial predicate is reduced to an equi-join
-on H3X cell ids (candidate generation), then refined with an exact
-JVM-side haversine / a vectorized ray-cast. Each join has one plan;
-the point-in-polygon refine is salted so a hot polygon's candidates
-spread over several tasks; AQE skew-join splitting absorbs moderate
-cell skew in the candidate joins.
+on H3X cell ids (candidate generation), then refined in the JVM with
+an exact haversine / an even-odd ray cast (a Catalyst higher-order
+fold). Each join has one plan; the point-in-polygon refine join is
+salted so a hot polygon's candidates spread over several tasks; AQE
+skew-join splitting absorbs moderate cell skew in the candidate joins.
 """
 
 from __future__ import annotations
@@ -308,20 +308,29 @@ def _brute_knn(
 # --- point-in-polygon (W6) -------------------------------------------------------
 
 
-def _ray_cast(px, py, ring_x, ring_y):
-    """Vectorized even-odd ray casting: points (n,) vs one ring (m,)."""
-    inside = np.zeros(len(px), dtype=bool)
-    x1, y1 = ring_x[:-1], ring_y[:-1]
-    x2, y2 = ring_x[1:], ring_y[1:]
-    for xa, ya, xb, yb in zip(x1, y1, x2, y2):
-        cond = (ya > py) != (yb > py)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            xint = (xb - xa) * (py - ya) / (yb - ya) + xa
-        inside ^= cond & (px < xint)
-    return inside
+def _ray_cast_expr(ring, px, py):
+    """Even-odd ray cast of (px, py) against a closed ``ring`` as one
+    Catalyst expression: a fold over the edge indices
+    ``0 .. size(ring)-2``. The crossing test guards the division (a
+    horizontal edge never crosses, and ANSI mode would raise
+    DIVIDE_BY_ZERO on it); a ring of fewer than 2 points matches
+    nothing."""
+
+    def edge(inside, i):
+        a, b = ring[i], ring[i + 1]
+        xa, ya, xb, yb = a["lon"], a["lat"], b["lon"], b["lat"]
+        crosses = (ya > py) != (yb > py)
+        xint = (xb - xa) * (py - ya) / (yb - ya) + xa
+        return inside != F.when(crosses, px < xint).otherwise(F.lit(False))
+
+    n = F.size(ring)
+    return F.when(
+        n >= 2, F.aggregate(F.sequence(F.lit(0), n - 2), F.lit(False), edge)
+    ).otherwise(F.lit(False))
 
 
-#: (poly, salt) refine groups per polygon (see point_in_polygon_join).
+#: Salts per polygon: ring rows per polygon in the refine join (see
+#: point_in_polygon_join).
 PIP_SALT = 16
 
 
@@ -345,15 +354,16 @@ def point_in_polygon_join(
     nested-loop — both tables can be arbitrarily large, work scales
     with true spatial overlap.
 
-    Refine: numpy ray casting over (poly, salt) COGROUPS: the candidate
-    side shuffles bare (point, poly, salt) rows — never the ring — and
-    each group receives its ring exactly once from a tiny
-    (n_polys x salt)-row side that carries the only ring bytes in the
-    whole refine, so ring bytes never scale with the candidate count.
-    The ray cast is per-point, so salting is result-neutral — without
-    it a country-sized polygon with 10^9 candidate points is ONE
-    straggler task holding one pandas frame; with it the hot polygon
-    spreads over ``PIP_SALT`` tasks.
+    Refine: an even-odd ray cast in Catalyst (a higher-order fold over
+    the ring's edges), after an inner equi-join on (poly, salt): the
+    candidate side shuffles bare (point, poly, salt) rows — never the
+    ring — and meets a tiny (n_polys x ``PIP_SALT``)-row side that
+    carries the only ring bytes in the whole refine, so ring bytes
+    never scale with the candidate count. The ray cast is per-point,
+    so salting is result-neutral — without it a country-sized polygon
+    with 10^9 candidate points is ONE straggler join task; with it the
+    hot polygon spreads over ``PIP_SALT`` tasks. No Python runs after
+    the candidate stage.
     """
     pts = points.select(
         F.col(point_id).alias("point_id"),
@@ -419,45 +429,18 @@ def point_in_polygon_join(
     cands = cands.withColumn(
         "_salt", F.pmod(F.xxhash64("point_id"), F.lit(PIP_SALT))
     )
-    # ring side of the cogroup: one row per (poly, salt) — the ONLY
-    # ring bytes in the refine, independent of candidate count. Columns
-    # renamed (fresh attributes): both cogroup sides descend from
-    # ``polygons`` and identical expression ids would trip the
-    # ambiguous-self-join analyzer check.
-    rings = polygons.select(
-        F.col(poly_id).alias("_r_poly"), F.col("ring").alias("_r_ring")
-    ).withColumn(
-        "_r_salt",
+    # ring side of the refine join: one row per (poly, salt), the ONLY
+    # ring bytes in the refine, independent of candidate count
+    rings = polygons.select(poly_id, "ring").withColumn(
+        "_salt",
         F.explode(
             F.sequence(F.lit(0).cast("long"), F.lit(PIP_SALT - 1).cast("long"))
         ),
     )
-
-    def refine(cand_pdf: pd.DataFrame, ring_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(cand_pdf) == 0:
-            return pd.DataFrame(
-                {
-                    "point_id": pd.Series(dtype="int64"),
-                    poly_id: pd.Series(dtype="int64"),
-                }
-            )
-        if len(ring_pdf) == 0:  # cover emitted a poly the ring side lacks
-            raise ValueError(
-                "point_in_polygon_join: candidate group without its ring "
-                "(polygons changed between the cover pass and the refine?)"
-            )
-        ring = ring_pdf["_r_ring"].iloc[0]
-        rx = np.array([p["lon"] for p in ring])
-        ry = np.array([p["lat"] for p in ring])
-        inside = _ray_cast(
-            cand_pdf["p_lon"].to_numpy(), cand_pdf["p_lat"].to_numpy(), rx, ry
-        )
-        return cand_pdf.loc[inside, ["point_id", poly_id]]
-
     return (
-        cands.groupBy(poly_id, "_salt")
-        .cogroup(rings.groupBy("_r_poly", "_r_salt"))
-        .applyInPandas(refine, f"point_id BIGINT, {poly_id} BIGINT")
+        cands.join(rings, [poly_id, "_salt"])
+        .filter(_ray_cast_expr(F.col("ring"), F.col("p_lon"), F.col("p_lat")))
+        .select("point_id", poly_id)
     )
 
 

@@ -1,6 +1,5 @@
 """Round-5 additions: pure-python PNG codec, interval_join tiering +
-outlier guard, packing shard-range guard, cogrouped point-in-polygon
-refine."""
+outlier guard, packing shard-range guard."""
 
 import numpy as np
 import pandas as pd

@@ -3,7 +3,10 @@ encodes, kNN vs brute-force golden (including each escalation level and
 face-boundary queries), within-distance join vs
 numpy oracle, salted join vs a driver-side cell-equality reference on a
 skewed fixture, point-in-polygon vs numpy ray-cast oracle (including
-hot-polygon salting), raster/vector round trip."""
+hot-polygon salting, the refine's plan and ring edge cases),
+raster/vector round trip."""
+
+import re
 
 import numpy as np
 import pytest
@@ -13,6 +16,7 @@ from pyspark.sql import functions as F
 from osmptparser_spark.functions import h3x
 from osmptparser_spark.functions.geo import haversine_np
 from osmptparser_spark.operators import spatial as sp
+from tests.ray_cast_oracle import ray_cast
 
 RNG = np.random.default_rng(99)
 # Ecuador-ish bbox (fixture region, within one icosahedron face)
@@ -43,6 +47,23 @@ def _edge_lat(lon: float) -> float:
     la = np.linspace(-40.0, 40.0, 4001)
     d = h3x.face_edge_distance_m(la, np.full_like(la, lon))
     return float(la[int(np.argmin(d))])
+
+
+_PLAN_NODE = re.compile(r"^[\s:+|-]*(?:\*\(\d+\) )?(\w+)")
+_PY_NODE = re.compile(r"Python|Pandas|InArrow")
+_RING_DDL = "poly_id BIGINT, ring ARRAY<STRUCT<lon: DOUBLE, lat: DOUBLE>>"
+
+
+def _final_plan(df) -> str:
+    """``df``'s executed plan; once ``df`` has run, AQE's final plan."""
+    text = df._jdf.queryExecution().executedPlan().toString()
+    return text.split("== Initial Plan ==")[0]
+
+
+def _plan_nodes(df) -> list:
+    """Node names of ``_final_plan(df)``, top-down."""
+    lines = _final_plan(df).splitlines()
+    return [m.group(1) for line in lines if (m := _PLAN_NODE.match(line))]
 
 
 def test_face_edge_distance_properties():
@@ -345,29 +366,86 @@ class TestWithinDistance:
         assert got8 == want
 
 
+@pytest.fixture(scope="module")
+def squares_df(spark):
+    polys = []
+    for pid in range(60):
+        cx, cy = -79.5 + 0.01 * pid, -1.5 + 0.005 * pid
+        ring = [
+            {"lon": cx, "lat": cy},
+            {"lon": cx + 0.1, "lat": cy},
+            {"lon": cx + 0.1, "lat": cy + 0.1},
+            {"lon": cx, "lat": cy + 0.1},
+            {"lon": cx, "lat": cy},
+        ]
+        polys.append((pid, ring))
+    return spark.createDataFrame(polys, _RING_DDL)
+
+
 class TestPointInPolygon:
-    def test_cells_strategy_no_broadcast_nested_loop(self, spark, queries_df):
+    def test_cells_strategy_no_broadcast_nested_loop(self, queries_df, squares_df):
         # the scale contract: candidate generation is an equi-join on
         # cell, never a BroadcastNestedLoopJoin over the point table —
         # with a LARGE polygon table a broadcast range join is a
         # scale-killer; the plan must not contain one.
-        polys = []
-        for pid in range(60):
-            cx, cy = -79.5 + 0.01 * pid, -1.5 + 0.005 * pid
-            ring = [
-                {"lon": cx, "lat": cy},
-                {"lon": cx + 0.1, "lat": cy},
-                {"lon": cx + 0.1, "lat": cy + 0.1},
-                {"lon": cx, "lat": cy + 0.1},
-                {"lon": cx, "lat": cy},
-            ]
-            polys.append((pid, ring))
-        polys_df = spark.createDataFrame(
-            polys, "poly_id BIGINT, ring ARRAY<STRUCT<lon: DOUBLE, lat: DOUBLE>>"
-        )
-        out = sp.point_in_polygon_join(queries_df, polys_df)
+        out = sp.point_in_polygon_join(queries_df, squares_df)
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastNestedLoopJoin" not in plan
+
+    def test_refine_runs_in_the_jvm(self, queries_df, squares_df):
+        # the ray cast is a Catalyst expression: no pandas cogroup, and
+        # the only Python stages are the point-side cell encode and the
+        # polygon cover
+        out = sp.point_in_polygon_join(queries_df, squares_df)
+        assert out.collect()
+        nodes = _plan_nodes(out)
+        assert "FlatMapCoGroupsInPandas" not in nodes
+        assert sorted(n for n in nodes if _PY_NODE.search(n)) == [
+            "ArrowEvalPython", "MapInPandas",
+        ]
+
+    def test_ring_edge_cases_match_ray_cast_oracle(self, spark):
+        # under ANSI SQL a division by zero raises instead of returning
+        # null: the horizontal and zero-length edges below would raise
+        # DIVIDE_BY_ZERO if the refine divided outside its crossing test
+        assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+        rings = {  # (lon, lat) vertices on the 1/20 grid
+            # staircase: horizontal edges, vertical edges at lon 0, .2, .4
+            1: [(0.0, 0.0), (0.4, 0.0), (0.4, 0.2), (0.2, 0.2), (0.2, 0.4),
+                (0.0, 0.4), (0.0, 0.0)],
+            # degenerate closed rings: 2 and 3 points, no interior
+            2: [(0.6, 0.1), (0.6, 0.1)],
+            3: [(0.6, 0.2), (0.9, 0.2), (0.6, 0.2)],
+            4: [(0.6, 0.3), (0.9, 0.5), (0.6, 0.3)],
+        }
+        polys_df = spark.createDataFrame(
+            [(pid, [{"lon": x, "lat": y} for x, y in r]) for pid, r in rings.items()],
+            _RING_DDL,
+        )
+        # every grid point: vertex latitudes, points on every edge
+        grid = [k / 20 for k in range(-1, 21)]
+        plat = np.array([la for la in grid for _ in grid])
+        plon = np.array([lo for _ in grid for lo in grid])
+        pts_df = spark.createDataFrame(
+            [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(plat, plon))],
+            "id BIGINT, lat DOUBLE, lon DOUBLE",
+        )
+        want = set()
+        for pid, r in rings.items():
+            rx = np.array([x for x, _ in r])
+            ry = np.array([y for _, y in r])
+            want |= {(int(i), pid) for i in np.where(ray_cast(plon, plat, rx, ry))[0]}
+        got = {
+            (r.point_id, r.poly_id)
+            for r in sp.point_in_polygon_join(pts_df, polys_df).collect()
+        }
+        assert got == want
+        assert {pid for _, pid in got} == {1}
+        # boundary points the oracle counts in: on the left vertical
+        # edge, and at a vertex latitude
+        on_edge = {(i, 1) for i in np.where((plon == 0.0) & (plat == 0.1))[0]}
+        at_vertex = {(i, 1) for i in np.where((plon == 0.1) & (plat == 0.2))[0]}
+        assert on_edge <= got and at_vertex <= got
 
     def test_cells_strategy_covers_face_boundary_polygon(self, spark):
         # polygon straddling an icosahedron face edge ((8.37, -156.79)
@@ -393,7 +471,7 @@ class TestPointInPolygon:
         )
         rx = np.array([p["lon"] for p in ring])
         ry = np.array([p["lat"] for p in ring])
-        want = {(int(i), 1) for i in np.where(sp._ray_cast(plon, plat, rx, ry))[0]}
+        want = {(int(i), 1) for i in np.where(ray_cast(plon, plat, rx, ry))[0]}
         got = {
             (r.point_id, r.poly_id)
             for r in sp.point_in_polygon_join(pts_df, polys_df, res=7).collect()
@@ -433,7 +511,7 @@ class TestPointInPolygon:
         for pid, ring in polys:
             rx = np.array([p["lon"] for p in ring])
             ry = np.array([p["lat"] for p in ring])
-            inside = sp._ray_cast(Q_LON, Q_LAT, rx, ry)
+            inside = ray_cast(Q_LON, Q_LAT, rx, ry)
             want |= {(int(i), pid) for i in np.where(inside)[0]}
         got = {
             (r.point_id, r.poly_id)
@@ -466,13 +544,10 @@ class TestPipSkew:
             & (pdf["lon"] > -0.75) & (pdf["lon"] < 0.75)
         )
         assert {r.point_id for r in rows} == set(pdf.loc[inside, "id"])
-        # the hot polygon's candidates really split into several groups
-        n_salts = (
-            pts.select(F.pmod(F.xxhash64("id"), F.lit(sp.PIP_SALT)).alias("s"))
-            .distinct()
-            .count()
-        )
-        assert n_salts > 1
+        # the refine join is keyed on (poly, salt), so the hot polygon's
+        # candidates split over PIP_SALT join keys
+        key = r"\[poly_id#\d+L, _salt#\d+L\]"
+        assert re.search(rf"Join {key}, {key}, Inner", _final_plan(out))
 
 
 class TestRasterVector:
@@ -489,7 +564,7 @@ class TestRasterVector:
             rx = np.array([p["lon"] for p in r.boundary])
             ry = np.array([p["lat"] for p in r.boundary])
             assert len(r.boundary) == 7
-            inside = sp._ray_cast(
+            inside = ray_cast(
                 np.array([r.centroid_lon]), np.array([r.centroid_lat]), rx, ry
             )
             assert inside[0]
